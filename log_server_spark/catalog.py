@@ -36,7 +36,9 @@ class ArchivedBatchError(RuntimeError):
 
 class Warehouse:
     def __init__(self, root: str, spark: SparkSession):
-        self.root = root
+        # absolute: table LOCATIONs resolve a relative path against the
+        # session's spark-warehouse dir, not the process cwd
+        self.root = os.path.abspath(root)
         self.spark = spark
         os.makedirs(root, exist_ok=True)
 

@@ -122,8 +122,7 @@ def cmd_archive(args) -> int:
     # BigStorage.scala:338-350): the ingest write uses zstd level 1 for
     # wall speed, the compaction rewrite pays for density once
     spark.sparkContext._jsc.hadoopConfiguration().set(
-        "parquet.compression.codec.zstd.level",
-        os.environ.get("LSS_ARCHIVE_ZSTD_LEVEL", "6"),
+        "parquet.compression.codec.zstd.level", "6"
     )
     with wh.lock():
         # sweep TORN batches FIRST: a crashed run's lineage-less batch dir

@@ -70,20 +70,6 @@ _TABLE_PAT = rf" table:(?P<t>{_JAVA_NON_WS}+)"
 _STATUS_LOOKUP = pa.array([OK, ERR_NO_NEWLINE, ERR_BAD_DATE, ERR_MISSING_TABLE, ERR_OVERSIZE])
 _DAYS_IN_MONTH = np.array([0, 31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31], dtype=np.int64)
 
-OUT_FIELDS = [
-    ("url", None),  # type copied from input
-    ("warc_ts", None),
-    ("lang", None),
-    ("seq", pa.int32()),
-    ("status", pa.string()),
-    ("table", pa.string()),
-    ("record_id", pa.string()),
-    ("ts_millis", pa.int64()),
-    ("text", pa.string()),
-    ("n_bytes", pa.int64()),
-    ("record_hash", pa.int32()),
-]
-
 
 def _str_buf(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(data buffer as uint8, row offsets int64) of a string/binary array —

@@ -57,20 +57,6 @@ def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     )
 
 
-def _shingle_sizes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """|distinct shingles| per doc via count-after-explode.
-
-    Counter-intuitively this beats the "obvious"
-    ``size(array_distinct(ngrams))`` projection by ~10x: the filter on the
-    aliased size gets pushed below the projection, duplicating the whole
-    interpreted higher-order ngram expression per row, while the explode
-    path evaluates it once. Measured, not guessed (see git history).
-    """
-    return _shingle_frame(df, id_col, text_col, n).groupBy("id").agg(
-        F.count("*").alias("sz")
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:

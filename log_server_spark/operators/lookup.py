@@ -15,12 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def canonical_id(col):
-    """RecordId.parse coercion: numeric strings render as the int."""
-    as_int = col.try_cast("int")
-    return F.when(as_int.isNotNull(), as_int.cast("string")).otherwise(col)
-
-
 def get_records(records: DataFrame, table: str, record_id: str | int) -> DataFrame:
     """All stored records for (table, id), timestamp-ascending."""
     from log_server_spark.parse_ref import canonical_record_id

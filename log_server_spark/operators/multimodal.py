@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Design: image/audio/video payloads are opaque ``binary`` columns with a
-typed metadata struct alongside; decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` stages so payload bytes
+typed metadata struct alongside; decode / feature-extract / resize run
+as Arrow-batched ``mapInPandas`` stages so payload bytes
 stream through Python in bounded batches (sized by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` — large blobs never
 accumulate on one executor).
@@ -108,21 +108,6 @@ def extract_features(
             )
 
     return media.mapInPandas(gen, schema=FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled frame offset.
-
-    JVM-side sequence explode (no Python): the per-frame decode would be a
-    downstream mapInPandas over (media_id, frame_ms, payload).
-    """
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        "payload",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ms"),
-    )
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:

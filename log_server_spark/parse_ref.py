@@ -34,8 +34,8 @@ Semantics reproduced (citations into /root/reference):
   payloads over 1 MiB are the reference's corruption guard (Storage.scala:19)
   -> error route.
 
-This module is dependency-light pure Python so the Spark UDF
-(functions/parse.py) and the pytest golden generator share it verbatim.
+This module is dependency-light pure Python so the parse stage's non-ASCII
+residue path (functions/parse_vec.py) and the tests share it verbatim.
 """
 
 from __future__ import annotations

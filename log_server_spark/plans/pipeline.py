@@ -278,6 +278,9 @@ def _keys_table(wh: Warehouse) -> str | None:
     # filesystem-level partition drop invalidates the cache
     tag = f"{spark.sparkContext.applicationId}:{name}"
     if tag not in _KEYS_SYNCED:
+        # the LOCATION must exist before CREATE TABLE, or Spark logs a
+        # FileNotFoundException stack trace on every fresh warehouse
+        os.makedirs(keys_dir, exist_ok=True)
         spark.sql(
             f"""CREATE TABLE IF NOT EXISTS {name} (
                   `table` STRING, record_id STRING, record_hash INT,
@@ -287,7 +290,6 @@ def _keys_table(wh: Warehouse) -> str | None:
                 CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
                 LOCATION '{keys_dir}'"""
         )
-        os.makedirs(keys_dir, exist_ok=True)
         spark.sql(f"MSCK REPAIR TABLE {name} SYNC PARTITIONS")
         # drop any cached file listing from before a filesystem-level change
         # (partition drop, archive compaction swap)
@@ -394,11 +396,8 @@ def compact_keys(wh: Warehouse) -> dict | None:
     # COST NOTE: the row-count verify below is two full scans of the keys
     # table (before + after) — O(total keys) at archive time. Keys rows are
     # 4 thin columns, so this is cheap relative to the rewrite itself, and
-    # a lost row here means silent re-ingestion of committed data — but for
-    # a huge keys table where the operator accepts write-job success as
-    # proof, LSS_SKIP_COMPACT_VERIFY=1 skips both counts.
-    skip_verify = bool(os.environ.get("LSS_SKIP_COMPACT_VERIFY"))
-    rows_before = None if skip_verify else src.count()
+    # a lost row here means silent re-ingestion of committed data.
+    rows_before = src.count()
     files_before = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
     merged = src.select(
         "table", "record_id", "record_hash", "ts_millis",
@@ -425,8 +424,8 @@ def compact_keys(wh: Warehouse) -> dict | None:
         spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
     else:  # legacy plain layout: one file per day
         merged.repartition("day").write.partitionBy("batch", "day").parquet(tmp)
-    rows_after = None if skip_verify else spark.read.parquet(tmp).count()
-    if not skip_verify and rows_after != rows_before:
+    rows_after = spark.read.parquet(tmp).count()
+    if rows_after != rows_before:
         shutil.rmtree(tmp)
         raise RuntimeError(
             f"keys compaction row mismatch: {rows_before} -> {rows_after}; aborted"
@@ -540,6 +539,13 @@ def _committed_keys(wh: Warehouse, ts_range: tuple | None = None) -> DataFrame |
     return keys.select(*DEDUP_KEY)
 
 
+# target output-file size the salt aims for (pre-compression record bytes
+# roughly track input page bytes at this schema); salting past the point
+# where each shard holds ~this much data buys no skew protection and costs
+# files + open/seek overhead on every downstream scan
+SALT_TARGET_FILE_BYTES = 96 << 20
+
+
 def _sink_salts(wh: Warehouse, salt: int) -> dict[str, int] | None:
     """Per-sink salt sized by the sink-volume distribution OBSERVED in the
     newest committed batch's partials — the north_rule's skew-adaptive salt
@@ -594,18 +600,9 @@ def _sink_salts(wh: Warehouse, salt: int) -> dict[str, int] | None:
         # target-size files needs at most k shards — below that, salting
         # only fragments files and multiplies downstream scan opens. At
         # scale the cap exceeds the budget share and is a no-op.
-        cap = max(1, -(-sink_bytes[s] // _salt_target_bytes()))
+        cap = max(1, -(-sink_bytes[s] // SALT_TARGET_FILE_BYTES))
         out[s] = min(v, cap)
     return out
-
-
-def _salt_target_bytes() -> int:
-    """Target output-file size the salt aims for (pre-compression record
-    bytes roughly track input page bytes at this schema); salting past the
-    point where each shard holds ~this much data buys no skew protection
-    and costs files + open/seek overhead on every downstream scan.
-    Env-tunable (bytes) so tests can exercise the allocation at toy scale."""
-    return int(os.environ.get("LSS_TARGET_FILE_BYTES", str(96 << 20)))
 
 
 def _salt_expr(
@@ -622,7 +619,7 @@ def _salt_expr(
     salts = _sink_salts(wh, salt) if "sink" in partition_cols else None
     if not salts:
         if input_bytes is not None:
-            need = -(-int(input_bytes * 0.4) // _salt_target_bytes())
+            need = -(-int(input_bytes * 0.4) // SALT_TARGET_FILE_BYTES)
             return F.lit(max(1, min(salt, need)))
         return F.lit(salt)
     expr = F.lit(salt)  # unseen sinks fall back to the uniform salt
@@ -699,11 +696,10 @@ def _run_batch_inner(
     # — the analogous lifecycle here is a cheap codec on the ingest write
     # (zstd level 1; the session default level 3 costs ~15% of batch wall
     # for ~7% smaller files) and full-strength zstd when `archive` rewrites
-    # the partition. Env LSS_INGEST_ZSTD_LEVEL overrides; parquet-java
-    # reads the level from the hadoop conf at write time.
+    # the partition. parquet-java reads the level from the hadoop conf at
+    # write time.
     spark.sparkContext._jsc.hadoopConfiguration().set(
-        "parquet.compression.codec.zstd.level",
-        os.environ.get("LSS_INGEST_ZSTD_LEVEL", "1"),
+        "parquet.compression.codec.zstd.level", "1"
     )
 
     def _cpu_now() -> float:
@@ -725,7 +721,7 @@ def _run_batch_inner(
     else:
         pages = spark.read.parquet(*files)
         parsed = parse_pages(pages).withColumn("day", F.to_date("warc_ts"))
-    parsed.persist(getattr(StorageLevel, os.environ.get("LSS_PERSIST_LEVEL", "MEMORY_AND_DISK")))
+    parsed.persist(StorageLevel.MEMORY_AND_DISK)
 
     ok = parsed.filter(F.col("status") == "ok")
     # idempotent error sink: an exact-duplicate malformed page (same url,

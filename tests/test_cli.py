@@ -61,3 +61,26 @@ def test_archive_preserves_get(spark, env, capsys):
     cli_main(["get", "--warehouse", env, "--table", before_sample["table"], "--id", before_sample["record_id"]])
     after = [json.loads(line) for line in capsys.readouterr().out.strip().splitlines()]
     assert after == before
+
+
+def test_fresh_warehouse_update_logs_no_stack_trace(tmp_path):
+    """A first `update` into an empty warehouse is the normal case: it must
+    not log a FileNotFoundException (the keys table LOCATION has to exist
+    before CREATE TABLE)."""
+    import subprocess
+    import sys
+
+    data = str(tmp_path / "data")
+    write_dataset(data, seed=3, n=40, num_files=1)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [
+            sys.executable, "-m", "log_server_spark.cli", "--master", "local[2]",
+            "update", "--warehouse", str(tmp_path / "wh"),
+            "--pages-dir", os.path.join(data, "pages"),
+        ],
+        cwd=repo, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "b00000: added=" in proc.stdout
+    assert "FileNotFoundException" not in proc.stderr

@@ -217,3 +217,19 @@ def test_salting_does_not_change_results(spark, dataset, tmp_path_factory):
     def nfiles(wh):
         return len(glob.glob(os.path.join(wh, RECORDS, "**", "*.parquet"), recursive=True))
     assert nfiles(whs[16]) >= nfiles(whs[1])
+
+
+def test_relative_warehouse_path(spark, tmp_path, monkeypatch):
+    """A relative warehouse root resolves against the cwd for every table,
+    the bucketed keys table's LOCATION included: batch 2 (a replay of batch
+    1's file) must dedup against batch 1's committed keys."""
+    data = tmp_path / "data"
+    write_dataset(str(data), seed=5, n=120, num_files=1)
+    pages = data / "pages"
+    shutil.copy(pages / "part-00000.parquet", pages / "part-00001.parquet")
+    monkeypatch.chdir(tmp_path)
+    first, replay = run_pipeline(spark, str(pages), "wh", batch_files=1)
+    assert first.added > 0
+    assert replay.added == 0
+    assert replay.duplicates == first.added + first.duplicates
+    assert os.path.isdir(tmp_path / "wh" / "records_keys" / "batch=b00000")

@@ -340,9 +340,10 @@ def test_adaptive_salt_reallocates_files_by_sink_volume(spark, tmp_path_factory,
     REALLOCATION logic is what this test exercises — test_round5 covers
     the cap itself."""
     from log_server_spark.datagen import write_dataset
+    from log_server_spark.plans import pipeline
     from log_server_spark.plans.pipeline import _sink_salts
 
-    monkeypatch.setenv("LSS_TARGET_FILE_BYTES", "64")
+    monkeypatch.setattr(pipeline, "SALT_TARGET_FILE_BYTES", 64)
 
     data = str(tmp_path_factory.mktemp("r4_salt_data"))
     write_dataset(data, seed=21, n=600, num_files=2)
