@@ -114,8 +114,7 @@ def cmd_archive(args) -> int:
         if owned:
             spark.stop()
         return 0
-    records_dir = os.path.join(args.warehouse, "records")
-    old_dir = records_dir + ".old"
+    records_dir = wh.path("records")
     tmp_dir = records_dir + ".compact"
     # archive is where compression strength belongs (the reference keeps
     # live segments uncompressed and gzips at archive time,
@@ -139,7 +138,7 @@ def cmd_archive(args) -> int:
         (
             df.repartition(F.col("batch"), F.col("sink"))
             .write.mode("overwrite")
-            .partitionBy("batch", "sink", *(["day"] if "day" in df.columns and args.by_day else []))
+            .partitionBy("batch", "sink")
             .parquet(tmp_dir)
         )
         rows_after = spark.read.parquet(tmp_dir).count()
@@ -149,32 +148,24 @@ def cmd_archive(args) -> int:
             if owned:
                 spark.stop()
             return 1
-        # atomic-enough swap: records is never absent without records.old
-        # present, so a crash at any point is recoverable (Warehouse.__init__
-        # restores or discards records.old)
-        os.rename(records_dir, old_dir)
-        os.rename(tmp_dir, records_dir)
-        shutil.rmtree(old_dir)
+        wh.swap_in("records", tmp_dir)
         # compacted layout is history: flip every batch read-only so a later
         # update with remapped ids fails loudly instead of rewriting it
         # (the reference's archive gzips segments AND marks them readOnly)
-        archived: list[str] = []
-        keys_stats = book_stats = None
-        if not getattr(args, "no_mark", False):
-            archived = sorted(
-                os.path.basename(d).split("=", 1)[1]
-                for d in glob.glob(os.path.join(records_dir, "batch=*"))
-            )
-            wh.mark_archived(archived)
-            # archive EVERYTHING, index files included (BigStorage.scala:
-            # 338-350): merge the now-read-only batches' keys partitions to
-            # one file per (day, bucket) and their bookkeeping to one file
-            # per table. Skipped under --no-mark: merging erases per-batch
-            # attribution, which is only sound for read-only batches.
-            from log_server_spark.plans.pipeline import compact_bookkeeping, compact_keys
+        archived = sorted(
+            os.path.basename(d).split("=", 1)[1]
+            for d in glob.glob(os.path.join(records_dir, "batch=*"))
+        )
+        wh.mark_archived(archived)
+        # archive EVERYTHING, index files included (BigStorage.scala:
+        # 338-350): merge the now-read-only batches' keys partitions to
+        # one file per (day, bucket) and their bookkeeping to one file
+        # per table. Merging erases per-batch attribution, which is only
+        # sound for read-only batches.
+        from log_server_spark.plans.pipeline import compact_bookkeeping, compact_keys
 
-            keys_stats = compact_keys(wh)
-            book_stats = compact_bookkeeping(wh, set(archived))
+        keys_stats = compact_keys(wh)
+        book_stats = compact_bookkeeping(wh, set(archived))
     n_after = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))
     print(
         json.dumps(
@@ -225,11 +216,6 @@ def main(argv: list[str] | None = None) -> int:
 
     p = sub.add_parser("archive", help="compact sink files (gzip-segments analogue)")
     p.add_argument("--warehouse", required=True)
-    p.add_argument("--by-day", action="store_true")
-    p.add_argument(
-        "--no-mark", action="store_true",
-        help="skip marking compacted batches read-only",
-    )
     p.add_argument(
         "--unmark", nargs="*", metavar="BATCH",
         help="make batches writable again (no ids = all) and exit",

@@ -1,92 +1,18 @@
-"""Aggregation stage — per-sink stats, windowed aggregates, `info` report.
+"""Aggregation stage — the `info` report.
 
-Mirrors the reference's running per-segment aggregates (SURVEY.md A1-A4:
-RecordStorage.scala:93-100 min/max ts + count + bytes; HeaderStorage
-distinct-key count :175; LogServerDb.info :58-80; ingest added/duplicate
-counters MemoryWiseLogWrapper.scala:97-111) as declarative groupBys —
-map-side partial aggregation makes these one shuffle of tiny partial states
-regardless of input size. Distinct-url is computed exactly (correctness gate)
-AND as an HLL sketch (`approx_count_distinct`) — at 10^12 rows the sketch is
-the per-window dashboard number, the exact count stays cheap because it
-rides the same shuffle.
+Mirrors the reference's per-segment `info` (SURVEY.md A3: LogServerDb.info
+:58-80; RecordStorage.scala:93-100 min/max ts + count; HeaderStorage
+distinct-key count :175) as one declarative groupBy — map-side partial
+aggregation makes it one shuffle of tiny partial states regardless of input
+size. The per-sink and windowed aggregates (A1, A2) are maintained
+incrementally by ``plans.pipeline.refresh_aggregates`` from per-batch
+partials, into the ``metrics_sink_stats`` and ``metrics_windowed`` tables.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def sink_stats(routed: DataFrame) -> DataFrame:
-    """Per-sink aggregate stats — the analogue of per-segment `info` (A3)."""
-    return routed.groupBy("sink").agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("url").alias("n_urls"),
-        F.approx_count_distinct("url").alias("n_urls_approx"),
-        F.countDistinct("table", "record_id", "record_hash").alias("n_keys"),
-        F.min("ts_millis").alias("min_ts"),
-        F.max("ts_millis").alias("max_ts"),
-        F.sum("n_bytes").alias("total_bytes"),
-    )
-
-
-def windowed_stats(routed: DataFrame, window: str = "1 day") -> DataFrame:
-    """Tumbling event-time windows per sink over warc_ts (north_star)."""
-    return (
-        routed.groupBy(F.window("warc_ts", window).alias("w"), "sink")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("url").alias("n_urls"),
-            F.approx_count_distinct("url").alias("n_urls_approx"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "sink",
-            "n_rows",
-            "n_urls",
-            "n_urls_approx",
-        )
-    )
-
-
-def combined_stats(records: DataFrame, window: str = "1 day"):
-    """sink_stats + windowed_stats + ingest status counts in ONE aggregation.
-
-    Uses GROUPING SETS ((status), (sink), (window_start, sink)) so the whole
-    metrics refresh is a single shuffle/scan instead of three. Returns
-    (status_counts_rows, sink_stats_rows, windowed_rows) as collected lists —
-    all three groupings are tiny (O(sinks * days)), so they are written
-    driver-side.
-    """
-    base = records.withColumn("window_start", F.window("warc_ts", window)["start"])
-    # n_keys counts distinct dedup keys of status='ok' rows ONLY: error rows
-    # bypass dedup (their keys can repeat), and the merged-partials refresh
-    # path publishes sum(n_ok) — by the dedup invariant every committed ok
-    # row holds a globally unique key, so both paths agree, including for
-    # the error sink (countDistinct skips the nulls the `when` produces)
-    ok_key = F.when(
-        F.col("status") == "ok", F.struct("table", "record_id", "record_hash")
-    )
-    agg = base.groupingSets(
-        [["status"], ["sink"], ["window_start", "sink"]],
-        "status", "sink", "window_start",
-    ).agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("url").alias("n_urls"),
-        F.approx_count_distinct("url").alias("n_urls_approx"),
-        F.countDistinct(ok_key).alias("n_keys"),
-        F.min("ts_millis").alias("min_ts"),
-        F.max("ts_millis").alias("max_ts"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.grouping_id().alias("gid"),
-    )
-    rows = agg.collect()
-    # gid bit order follows the grouping column order (status, sink, window_start)
-    status_rows = [r for r in rows if r["gid"] == 0b011]
-    sink_rows = [r for r in rows if r["gid"] == 0b101]
-    windowed_rows = [r for r in rows if r["gid"] == 0b100]
-    return status_rows, sink_rows, windowed_rows
 
 
 def info(records: DataFrame) -> DataFrame:

@@ -2,7 +2,21 @@
 
 The Spark restatement of the reference's `update` ingest lifecycle
 (SURVEY.md §3.1) plus the north_rule additions (enrich, fan-out sinks,
-windowed aggregates, lineage/resume, skew salting).
+windowed aggregates, lineage/resume, skew salting). ``cli update`` is its
+command-line entry point.
+
+Warehouse layout (one layout; the reference likewise keeps one segment
+layout of ``.record`` data, ``.header`` offsets and ``.hash`` dedup index):
+
+- ``records/batch=bNNNNN/sink=…`` — the records, one partition per batch;
+- ``records_keys/batch=…/day=…`` — the dedup-key projection, day from the
+  record-header ts, CLUSTERED BY ``record_hash`` into the bucket count a
+  marker file pins (``_KeysLayout``); ``archive`` merges every batch into
+  ``batch=archived``;
+- ``metrics_partials`` / ``metrics_ingest`` / ``lineage`` — one small file
+  per batch, merged into one ``part-archive-*`` file by ``archive``;
+- ``metrics_sink_stats`` / ``metrics_windowed`` — rebuilt after each run by
+  merging the partials.
 
 Exactly-once / resume protocol (T4 analogue — the reference deletes source
 files only after a successful storage close, LogServerDb.scala:86-93; we
@@ -13,10 +27,6 @@ never delete the immutable input, we record completion):
   updates cannot interleave torn-write cleanup with live writes;
 - input files are processed in sorted path order (O4 determinism,
   NewLogReader.scala:44-48) in batches of ``batch_files``;
-- each batch writes records under ``records/batch=bNNNNN/sink=…`` and its
-  dedup-key projection under ``records_keys/batch=bNNNNN/day=…`` — the
-  ``.record`` / ``.hash`` file split of the reference's segment layout
-  (RecordStorage vs HeaderStorage);
 - per-batch bookkeeping (partial aggregates, ingest counters, lineage) is
   written driver-side as ONE file per batch named by batch id, so a
   reprocessed batch overwrites its own rows — idempotent by construction;
@@ -31,7 +41,7 @@ never delete the immutable input, we record completion):
   batch — the directory dance is the parquet-local stand-in.
 
 Scale properties:
-- one scan per batch; the fan-out is a single ``partitionBy(sink, day)``
+- one scan per batch; the fan-out is a single ``partitionBy(batch, sink)``
   write, not N filtered re-scans;
 - cross-batch dedup anti-joins the ``records_keys`` projection, pruned by
   the batch's record-ts day range via PARTITION pruning (day= directories
@@ -53,6 +63,7 @@ Scale properties:
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
 import time
@@ -151,11 +162,13 @@ def _committed_batches(wh: Warehouse) -> dict[str, frozenset]:
 
 
 def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
-    """Drop one batch's rows from a tiny bookkeeping table whose files are
-    NOT named by batch id (legacy timestamp-named files from round 1).
+    """Drop one batch's rows from a tiny bookkeeping table's files that are
+    NOT named by batch id: the ``part-archive-*`` files ``compact_bookkeeping``
+    merges archived batches into. A batch dropped after ``archive --unmark``
+    has its rows there, not in a ``part-<batch>.parquet`` of its own.
     Driver-side pyarrow rewrite — these tables are O(batches) rows.
 
-    Only LEGACY-named files (not ``part-b*.parquet``) are read and rewritten:
+    Only the merged files (not ``part-b*.parquet``) are read and rewritten:
     folding per-batch files into the merged rewrite file would break
     ``write_small``'s overwrite-idempotence — a reprocessed batch would
     overwrite its own per-batch file while its old rows also lived on in the
@@ -166,9 +179,7 @@ def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
     then swapped in with the same rename protocol as ``archive`` (table ->
     table.old; .rewrite -> table; rm table.old). A crash at any point leaves
     either the old table intact or the swap completable — ``Warehouse``
-    recovery on lock acquisition finishes it. The pre-fix ordering (delete
-    every old file, then write the filtered one) wiped the whole table if
-    the process died in between.
+    recovery on lock acquisition finishes it.
     """
     import re
 
@@ -178,10 +189,10 @@ def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
     d = wh.path(table)
     files = sorted(glob.glob(os.path.join(d, "*.parquet")))
     per_batch_re = re.compile(r"part-b\d{5}\.parquet$")
-    legacy = [f for f in files if not per_batch_re.search(os.path.basename(f))]
-    if not legacy:
+    merged = [f for f in files if not per_batch_re.search(os.path.basename(f))]
+    if not merged:
         return
-    t = pq.read_table(legacy)
+    t = pq.read_table(merged)
     kept = t.filter(pc.field("batch") != batch_id)
     if kept.num_rows == t.num_rows:
         return
@@ -189,9 +200,9 @@ def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     for f in files:
-        if f not in legacy:
+        if f not in merged:
             os.link(f, os.path.join(tmp, os.path.basename(f)))
-    if kept.num_rows or len(legacy) == len(files):
+    if kept.num_rows or len(merged) == len(files):
         # an empty filtered table still gets a (0-row, schema-bearing) file
         # when it would otherwise leave the dir empty, so readers see a
         # valid parquet dir rather than a vanished table
@@ -212,6 +223,17 @@ def _drop_batch(wh: Warehouse, batch_id: str) -> None:
             f"batch {batch_id} is archived (read-only); refusing to rewrite it."
             " Run `archive --unmark` on this warehouse to make it writable again."
         )
+    records_dir = os.path.join(wh.path(RECORDS), f"batch={batch_id}")
+    if os.path.isdir(records_dir) and os.path.isdir(
+        os.path.join(wh.path(RECORDS_KEYS), f"batch={ARCHIVED_KEYS_BATCH}")
+    ):
+        # after `archive --unmark` the batch's keys live in the merged
+        # batch=archived partition, not under batch=<id>: take them out
+        # while its records still name them, or the orphaned keys would
+        # anti-join every re-ingested record away
+        ok = wh.spark.read.parquet(records_dir).filter(F.col("status") == "ok").select(*DEDUP_KEY)
+        keys = wh.read(RECORDS_KEYS)
+        _rebuild_keys(wh, keys.join(ok, on=DEDUP_KEY, how="left_anti"), keys.count() - ok.count())
     for table in (RECORDS, RECORDS_KEYS):
         d = os.path.join(wh.path(table), f"batch={batch_id}")
         if os.path.isdir(d):
@@ -222,11 +244,9 @@ def _drop_batch(wh: Warehouse, batch_id: str) -> None:
         if os.path.isfile(f):
             os.remove(f)
         if os.path.isdir(wh.path(table)):
-            # ALSO sweep legacy timestamp-named bookkeeping rows (round-1
-            # layout): a batch reprocessed once after the per-batch-file
-            # upgrade has BOTH a part-<batch>.parquet and stale legacy rows,
-            # and the stale rows would re-poison unit-list validation (and
-            # double-count ingest metrics) on every subsequent resume
+            # ALSO sweep the batch's rows out of archive-merged bookkeeping
+            # files: left there, they would re-poison unit-list validation
+            # (and double-count ingest metrics) on every later resume
             _rewrite_without_batch(wh, table, batch_id)
 
 
@@ -236,11 +256,69 @@ KEYS_BUCKETS_DEFAULT = 32
 # keys compaction; can never collide with real ids (they match b\d{5})
 ARCHIVED_KEYS_BATCH = "archived"
 
+KEYS_SCHEMA = (
+    "`table` STRING, record_id STRING, record_hash INT, ts_millis BIGINT, batch STRING, day DATE"
+)
+KEYS_COLS = ("table", "record_id", "record_hash", "ts_millis", "batch", "day")
 
-def _keys_table(wh: Warehouse) -> str | None:
+
+class _KeysLayout:
+    """The one on-disk layout of ``records_keys``: partitioned by
+    (batch, day) and CLUSTERED BY ``record_hash`` into a bucket count that a
+    marker file pins per warehouse (``LSS_KEYS_BUCKETS`` is read once, when
+    the first keys are about to be written). Bucket-id file names are what
+    make a bucketed scan correct, so a keys dir without the marker predates
+    this layout and is refused, never read another way."""
+
+    def __init__(self, wh: Warehouse):
+        marker = os.path.join(wh.root, "records_keys.bucketed")
+        if os.path.isfile(marker):
+            with open(marker) as f:
+                self.buckets = int(f.read().strip())
+        elif wh.exists(RECORDS_KEYS):
+            raise RuntimeError(
+                f"{wh.path(RECORDS_KEYS)} has no {os.path.basename(marker)} marker:"
+                " the warehouse predates the bucketed keys layout; ingest its"
+                " pages into a new warehouse"
+            )
+        else:
+            self.buckets = int(os.environ.get("LSS_KEYS_BUCKETS", str(KEYS_BUCKETS_DEFAULT)))
+            with open(marker, "w") as f:
+                f.write(str(self.buckets))
+        self.spark = wh.spark
+        self.name = self.table_name(wh)
+
+    @staticmethod
+    def table_name(wh: Warehouse) -> str:
+        """Session-catalog name of the warehouse's keys table."""
+        return f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
+
+    def create(self, name: str, location: str) -> None:
+        # the LOCATION must exist before the table is created, or Spark logs
+        # a FileNotFoundException stack trace
+        os.makedirs(location, exist_ok=True)
+        self.spark.sql(
+            f"""CREATE TABLE IF NOT EXISTS {name} ({KEYS_SCHEMA})
+                USING PARQUET
+                PARTITIONED BY (batch, day)
+                CLUSTERED BY (record_hash) INTO {self.buckets} BUCKETS
+                LOCATION '{location}'"""
+        )
+
+    def insert(self, keys: DataFrame, name: str) -> None:
+        # pre-cluster reducers on (day, bucket id) — pmod(hash(col), B) IS
+        # Spark's bucket-id function (HashPartitioning.partitionIdExpression),
+        # so each reducer holds exactly one (day, bucket) and writes ONE file
+        (
+            keys.select(*KEYS_COLS)
+            .repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(self.buckets)))
+            .write.insertInto(name)
+        )
+
+
+def _keys_table(wh: Warehouse) -> _KeysLayout:
     """Register (or re-register) the warehouse's ``records_keys`` as a
-    BUCKETED external table and return its session-catalog name — or None
-    for legacy warehouses whose keys files predate bucketing.
+    BUCKETED external table; its session-catalog name is ``.name``.
 
     Bucketing by ``record_hash`` makes the committed side of the per-batch
     anti-join Exchange-free: the bucketed scan reports
@@ -251,51 +329,25 @@ def _keys_table(wh: Warehouse) -> str | None:
     never does. This is ROADMAP #3: the parquet-dir equivalent of an
     Iceberg bucket-partitioned index table.
 
-    The catalog entry is session-scoped (in-memory catalog): CREATE TABLE
-    IF NOT EXISTS + ``MSCK REPAIR ... SYNC PARTITIONS`` re-derives it from
-    the files on every call, so any session — and any filesystem-level
-    batch drop — self-heals. A marker file pins the bucket count; a keys
-    dir WITHOUT the marker is a legacy layout and reads through the plain
-    path (bucket-named files are required for a correct bucketed scan).
+    The catalog entry is session-scoped (in-memory catalog): an IF NOT EXISTS
+    registration + ``MSCK REPAIR ... SYNC PARTITIONS`` re-derives it from
+    the files, so any session — and any filesystem-level batch drop —
+    self-heals.
     """
-    import hashlib
-
-    marker = os.path.join(wh.root, "records_keys.bucketed")
-    keys_dir = wh.path(RECORDS_KEYS)
-    if not os.path.isfile(marker):
-        if wh.exists(RECORDS_KEYS):
-            return None  # legacy plain layout: files lack bucket ids
-        buckets = int(os.environ.get("LSS_KEYS_BUCKETS", str(KEYS_BUCKETS_DEFAULT)))
-        with open(marker, "w") as f:
-            f.write(str(buckets))
-    else:
-        with open(marker) as f:
-            buckets = int(f.read().strip())
-    name = f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
+    layout = _KeysLayout(wh)
     spark = wh.spark
     # registration + partition sync are driver-side catalog commands
     # (~100 ms each): do them once per session, and again only after a
     # filesystem-level partition drop invalidates the cache
-    tag = f"{spark.sparkContext.applicationId}:{name}"
+    tag = f"{spark.sparkContext.applicationId}:{layout.name}"
     if tag not in _KEYS_SYNCED:
-        # the LOCATION must exist before CREATE TABLE, or Spark logs a
-        # FileNotFoundException stack trace on every fresh warehouse
-        os.makedirs(keys_dir, exist_ok=True)
-        spark.sql(
-            f"""CREATE TABLE IF NOT EXISTS {name} (
-                  `table` STRING, record_id STRING, record_hash INT,
-                  ts_millis BIGINT, batch STRING, day DATE)
-                USING PARQUET
-                PARTITIONED BY (batch, day)
-                CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
-                LOCATION '{keys_dir}'"""
-        )
-        spark.sql(f"MSCK REPAIR TABLE {name} SYNC PARTITIONS")
+        layout.create(layout.name, wh.path(RECORDS_KEYS))
+        spark.sql(f"MSCK REPAIR TABLE {layout.name} SYNC PARTITIONS")
         # drop any cached file listing from before a filesystem-level change
         # (partition drop, archive compaction swap)
-        spark.sql(f"REFRESH TABLE {name}")
+        spark.sql(f"REFRESH TABLE {layout.name}")
         _KEYS_SYNCED.add(tag)
-    return name
+    return layout
 
 
 _KEYS_SYNCED: set[str] = set()
@@ -304,10 +356,33 @@ _KEYS_SYNCED: set[str] = set()
 def _keys_desync(wh: Warehouse) -> None:
     """Filesystem-level keys-partition removal happened: force the next
     ``_keys_table`` call to re-sync the session catalog with the files."""
-    import hashlib
+    _KEYS_SYNCED.discard(f"{wh.spark.sparkContext.applicationId}:{_KeysLayout.table_name(wh)}")
 
-    name = f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
-    _KEYS_SYNCED.discard(f"{wh.spark.sparkContext.applicationId}:{name}")
+
+def _rebuild_keys(wh: Warehouse, keys: DataFrame, want_rows: int) -> None:
+    """Replace the whole ``records_keys`` table with ``keys`` (KEYS_COLS).
+
+    Crash-safe via the standard swap protocol: the new table is fully built
+    in ``records_keys.compact`` through a temp table with the same bucketed
+    layout (bucket-id file naming keeps bucket-pruned scans and the
+    Exchange-free anti-join working), verified against ``want_rows``, then
+    swapped in; ``Warehouse`` lock-acquisition recovery finishes or discards
+    any interrupted state. Caller must hold the warehouse lock."""
+    layout = _KeysLayout(wh)
+    spark = wh.spark
+    tmp = wh.path(RECORDS_KEYS) + ".compact"
+    shutil.rmtree(tmp, ignore_errors=True)
+    tmp_name = layout.name + "_compact"
+    spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
+    layout.create(tmp_name, tmp)
+    layout.insert(keys, tmp_name)
+    spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
+    rows_after = spark.read.schema(KEYS_SCHEMA).parquet(tmp).count()
+    if rows_after != want_rows:
+        shutil.rmtree(tmp)
+        raise RuntimeError(f"keys rebuild row mismatch: {want_rows} -> {rows_after}; aborted")
+    wh.swap_in(RECORDS_KEYS, tmp)
+    _keys_desync(wh)  # force MSCK + REFRESH on next committed-keys read
 
 
 def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
@@ -326,7 +401,7 @@ def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
       loudly: an absent/lost lineage dir would otherwise classify every
       batch as torn and a plain `archive` would silently empty the
       warehouse. (A genuinely-torn FIRST batch is still recovered — the
-      per-batch rewrite in ``_run_batch_inner`` deletes its own colliding
+      per-batch rewrite in ``run_batch`` deletes its own colliding
       partition without needing this sweep.)
     - Swept partitions are RENAMED to ``_torn-<bid>-<ns>`` siblings, not
       rmtree'd: underscore-prefixed dirs are invisible to Spark/parquet
@@ -371,70 +446,26 @@ def compact_keys(wh: Warehouse) -> dict | None:
     index files included: BigStorage.scala:338-350, Directory.scala:129-138).
 
     Without this, keys fragment at O(batches x days x buckets) files
-    forever — the first ops pain a daily-batch warehouse hits. Bucket ids
-    are preserved by writing through a temp bucketed table with the same
-    CLUSTERED BY spec (bucket-id file naming + bucket-pruned scans keep
-    working; the Exchange-free anti-join is unaffected). Only safe once the
-    source batches are read-only (archived): the merge erases per-batch
-    attribution, and ``_drop_batch`` on an archived batch already refuses.
-
-    Crash-safe via the standard swap protocol: the merged layout is fully
-    built in ``records_keys.compact``, verified by row count, then swapped
-    in; ``Warehouse`` lock-acquisition recovery finishes or discards any
-    interrupted state. Caller must hold the warehouse lock.
+    forever — the first ops pain a daily-batch warehouse hits. Only safe
+    once the source batches are read-only (archived): the merge erases
+    per-batch attribution, and ``_drop_batch`` on an archived batch already
+    refuses. Built, verified and swapped in by ``_rebuild_keys``. Caller must
+    hold the warehouse lock.
     """
-    import hashlib
-
     if not wh.exists(RECORDS_KEYS):
         return None
-    spark = wh.spark
     keys_dir = wh.path(RECORDS_KEYS)
-    tmp = keys_dir + ".compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    marker = os.path.join(wh.root, "records_keys.bucketed")
     src = wh.read(RECORDS_KEYS)
-    # COST NOTE: the row-count verify below is two full scans of the keys
-    # table (before + after) — O(total keys) at archive time. Keys rows are
-    # 4 thin columns, so this is cheap relative to the rewrite itself, and
-    # a lost row here means silent re-ingestion of committed data.
+    # COST NOTE: the row-count verify is two full scans of the keys table
+    # (before + after) — O(total keys) at archive time. Keys rows are 4 thin
+    # columns, so this is cheap relative to the rewrite itself, and a lost
+    # row here means silent re-ingestion of committed data.
     rows_before = src.count()
     files_before = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
-    merged = src.select(
-        "table", "record_id", "record_hash", "ts_millis",
-        F.lit(ARCHIVED_KEYS_BATCH).alias("batch"), "day",
-    )
-    if os.path.isfile(marker):
-        with open(marker) as f:
-            buckets = int(f.read().strip())
-        tmp_name = f"records_keys_compact_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        spark.sql(
-            f"""CREATE TABLE {tmp_name} (
-                  `table` STRING, record_id STRING, record_hash INT,
-                  ts_millis BIGINT, batch STRING, day DATE)
-                USING PARQUET
-                PARTITIONED BY (batch, day)
-                CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
-                LOCATION '{tmp}'"""
-        )
-        (
-            merged.repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(buckets)))
-            .write.insertInto(tmp_name)
-        )
-        spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
-    else:  # legacy plain layout: one file per day
-        merged.repartition("day").write.partitionBy("batch", "day").parquet(tmp)
-    rows_after = spark.read.parquet(tmp).count()
-    if rows_after != rows_before:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"keys compaction row mismatch: {rows_before} -> {rows_after}; aborted"
-        )
-    wh.swap_in(RECORDS_KEYS, tmp)
-    _keys_desync(wh)  # force MSCK + REFRESH on next committed-keys read
+    _rebuild_keys(wh, src.withColumn("batch", F.lit(ARCHIVED_KEYS_BATCH)), rows_before)
     files_after = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
     return {
-        "keys_rows": rows_after,
+        "keys_rows": rows_before,
         "keys_files_before": files_before,
         "keys_files_after": files_after,
     }
@@ -442,9 +473,9 @@ def compact_keys(wh: Warehouse) -> dict | None:
 
 def compact_bookkeeping(wh: Warehouse, archived_ids: set[str]) -> dict:
     """Merge the archived batches' per-batch bookkeeping files — plus any
-    legacy timestamp-named files and previous merge output — into ONE file
-    per table (lineage / ingest counters / partials): the index-file leg of
-    the reference's archive-everything (Directory.scala:129-138).
+    previous merge output — into ONE file per table (lineage / ingest
+    counters / partials): the index-file leg of the reference's
+    archive-everything (Directory.scala:129-138).
 
     Per-batch file granularity exists so a REPROCESSED batch overwrites its
     own rows; archived batches are read-only and can never be reprocessed,
@@ -494,7 +525,8 @@ def _ts_day(ts_millis_col):
 
 
 def _committed_keys(wh: Warehouse, ts_range: tuple | None = None) -> DataFrame | None:
-    """Committed dedup-key projection, pruned to the batch's record-ts range.
+    """Committed dedup-key projection, pruned to the batch's record-ts range;
+    None while no keys are committed.
 
     The reference probes a segment only if its [minTs, maxTs] contains the
     candidate record's timestamp (BigStorage.scala:30) — valid because the
@@ -504,38 +536,21 @@ def _committed_keys(wh: Warehouse, ts_range: tuple | None = None) -> DataFrame |
     warc_ts-derived day would prune soundly only while capture day == header
     day), so the range predicate prunes whole day= directories (file
     skipping a judge can see in the plan as PartitionFilters), with
-    ts_millis row-group stats trimming the edges. Round 1 filtered ts on the
-    records table itself, whose (batch, sink) layout spans the full window
-    in every file — the filter pruned nothing.
+    ts_millis row-group stats trimming the edges. The scan is bucketed, so
+    the committed side of the anti-join is Exchange-free.
     """
-    if wh.exists(RECORDS_KEYS) or os.path.isfile(os.path.join(wh.root, "records_keys.bucketed")):
-        name = _keys_table(wh)
-        # bucketed scan when available (Exchange-free committed side);
-        # legacy warehouses fall back to the plain partitioned read
-        keys = wh.spark.table(name) if name else wh.read(RECORDS_KEYS)
-        if ts_range is not None:
-            lo, hi = int(ts_range[0]), int(ts_range[1])
-            pred = F.col("ts_millis").between(F.lit(lo), F.lit(hi))
-            if name:
-                # day-partition pruning is sound ONLY for bucketed layouts,
-                # whose day= dirs derive from ts_millis. Legacy (round-1)
-                # warehouses wrote day from warc_ts CAPTURE day, so pruning
-                # day with record-ts bounds would drop a committed duplicate
-                # captured outside the batch's header-ts window — silent
-                # re-ingest. Legacy keeps the row-level ts predicate only
-                # (sound, just less file skipping).
-                pred = pred & F.col("day").between(
-                    F.date_from_unix_date(F.lit(lo // 86_400_000)),
-                    F.date_from_unix_date(F.lit(hi // 86_400_000)),
-                )
-            keys = keys.filter(pred)
-        return keys.select(*DEDUP_KEY)
-    if not wh.exists(RECORDS):
+    if not wh.exists(RECORDS_KEYS):
         return None
-    # legacy warehouses (no keys table): column-pruned scan of the sink
-    keys = wh.read(RECORDS).filter(F.col("status") == "ok")
+    keys = wh.spark.table(_keys_table(wh).name)
     if ts_range is not None:
-        keys = keys.filter(F.col("ts_millis").between(int(ts_range[0]), int(ts_range[1])))
+        lo, hi = int(ts_range[0]), int(ts_range[1])
+        keys = keys.filter(
+            F.col("ts_millis").between(F.lit(lo), F.lit(hi))
+            & F.col("day").between(
+                F.date_from_unix_date(F.lit(lo // 86_400_000)),
+                F.date_from_unix_date(F.lit(hi // 86_400_000)),
+            )
+        )
     return keys.select(*DEDUP_KEY)
 
 
@@ -605,18 +620,14 @@ def _sink_salts(wh: Warehouse, salt: int) -> dict[str, int] | None:
     return out
 
 
-def _salt_expr(
-    wh: Warehouse, salt: int, partition_cols: tuple[str, ...],
-    input_bytes: int | None = None,
-):
-    """Salt modulus as a Column: per-sink adaptive when history exists and
-    the layout partitions by sink, else a uniform salt SIZED TO THE BATCH
-    VOLUME — `salt` is the ceiling (skew defense at scale), but a first
-    batch small enough that even its hottest sink (assume <= ~40% of the
-    bytes) fits one target-size file gets salt 1: fewer, bigger files, and
-    every downstream scan of the batch partition opens salt-times fewer
-    footers. At 100 TB the estimate saturates at the ceiling immediately."""
-    salts = _sink_salts(wh, salt) if "sink" in partition_cols else None
+def _salt_expr(wh: Warehouse, salt: int, input_bytes: int | None = None):
+    """Salt modulus as a Column: per-sink adaptive when history exists,
+    else a uniform salt SIZED TO THE BATCH VOLUME — `salt` is the ceiling
+    (skew defense at scale), but a first batch small enough that even its
+    hottest sink (assume <= ~40% of the bytes) fits one target-size file
+    gets salt 1: fewer, bigger files, and every downstream scan of the batch
+    partition opens salt-times fewer footers. At 100 TB the estimate saturates at the ceiling immediately."""
+    salts = _sink_salts(wh, salt)
     if not salts:
         if input_bytes is not None:
             need = -(-int(input_bytes * 0.4) // SALT_TARGET_FILE_BYTES)
@@ -636,166 +647,229 @@ def run_batch(
     lang_lookup: DataFrame,
     domain_lookup: DataFrame,
     salt: int = 8,
-    partition_cols: tuple[str, ...] = ("sink",),
     source_format: str = "pages",
 ) -> BatchResult:
-    """Ingest one batch. Wrapper: the inner body tunes two session-global
-    split confs per batch (maxPartitionBytes/openCostInBytes); snapshot and
-    restore them here so unrelated queries on the same session never
-    inherit a batch's (possibly tiny) split sizing."""
+    """Ingest one batch. It tunes two session-global split confs
+    (maxPartitionBytes/openCostInBytes) for the batch and restores them on
+    the way out, so unrelated queries on the same session never inherit a
+    batch's (possibly tiny) split sizing."""
     _CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
     saved = {k: spark.conf.get(k, None) for k in _CONFS}
     try:
-        return _run_batch_inner(
-            spark, wh, batch_id, files, lang_lookup, domain_lookup,
-            salt=salt, partition_cols=partition_cols, source_format=source_format,
+        # torn-write recovery FIRST: a batch dir without a lineage row is a
+        # partial write from a crashed run. Both the records partition and the
+        # keys partition must go before any DataFrame lists either table, or
+        # the anti-join would treat uncommitted keys as committed and drop the
+        # whole reprocessed batch. (Bookkeeping files are overwritten at commit
+        # time — same per-batch filename — so they need no pre-cleaning.)
+        for table in (RECORDS, RECORDS_KEYS):
+            d = os.path.join(wh.path(table), f"batch={batch_id}")
+            if os.path.isdir(d):
+                shutil.rmtree(d)
+                _keys_desync(wh)
+
+        # split sizing: the parse stage is python-bound, so the scan must yield
+        # >= ~3 tasks per core or cores sit idle (the 128 MB default + 4 MB
+        # open-cost packs small files into a handful of splits). Runtime SQL
+        # confs, so this tunes per batch without session restart; on a real
+        # cluster with ~1 GB input files the default would already be fine.
+        total_bytes = sum(os.path.getsize(f) for f in files)
+        target_tasks = spark.sparkContext.defaultParallelism * 3
+        split = max(1 << 20, min(128 << 20, total_bytes // max(1, target_tasks)))
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        spark.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
+        # live-segment write cost: the reference keeps live segments
+        # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
+        # — the analogous lifecycle here is a cheap codec on the ingest write
+        # (zstd level 1; the session default level 3 costs ~15% of batch wall
+        # for ~7% smaller files) and full-strength zstd when `archive` rewrites
+        # the partition. parquet-java reads the level from the hadoop conf at
+        # write time.
+        spark.sparkContext._jsc.hadoopConfiguration().set(
+            "parquet.compression.codec.zstd.level", "1"
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
+        def _cpu_now() -> float:
+            # system-wide cpu-seconds (user+sys): phase marks stay meaningful on
+            # a host whose wall-clock is storm-inflated — cpu measures the work
+            with open("/proc/stat") as f:
+                p = f.readline().split()[1:]
+            return (int(p[0]) + int(p[2])) / 100.0
 
-def _run_batch_inner(
-    spark: SparkSession,
-    wh: Warehouse,
-    batch_id: str,
-    files: list[str],
-    lang_lookup: DataFrame,
-    domain_lookup: DataFrame,
-    salt: int = 8,
-    partition_cols: tuple[str, ...] = ("sink",),
-    source_format: str = "pages",
-) -> BatchResult:
-    # torn-write recovery FIRST: a batch dir without a lineage row is a
-    # partial write from a crashed run. Both the records partition and the
-    # keys partition must go before any DataFrame lists either table, or
-    # the anti-join would treat uncommitted keys as committed and drop the
-    # whole reprocessed batch. (Bookkeeping files are overwritten at commit
-    # time — same per-batch filename — so they need no pre-cleaning.)
-    for table in (RECORDS, RECORDS_KEYS):
-        d = os.path.join(wh.path(table), f"batch={batch_id}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-            _keys_desync(wh)
+        _t0, _c0 = time.time(), _cpu_now()
+        _marks: list[tuple[str, float, float]] = []
 
-    # split sizing: the parse stage is python-bound, so the scan must yield
-    # >= ~3 tasks per core or cores sit idle (the 128 MB default + 4 MB
-    # open-cost packs small files into a handful of splits). Runtime SQL
-    # confs, so this tunes per batch without session restart; on a real
-    # cluster with ~1 GB input files the default would already be fine.
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    target_tasks = spark.sparkContext.defaultParallelism * 3
-    split = max(1 << 20, min(128 << 20, total_bytes // max(1, target_tasks)))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
-    # live-segment write cost: the reference keeps live segments
-    # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
-    # — the analogous lifecycle here is a cheap codec on the ingest write
-    # (zstd level 1; the session default level 3 costs ~15% of batch wall
-    # for ~7% smaller files) and full-strength zstd when `archive` rewrites
-    # the partition. parquet-java reads the level from the hadoop conf at
-    # write time.
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "parquet.compression.codec.zstd.level", "1"
-    )
+        def _mark(phase: str) -> None:
+            if os.environ.get("LSS_TIMING"):
+                _marks.append((phase, time.time(), _cpu_now()))
 
-    def _cpu_now() -> float:
-        # system-wide cpu-seconds (user+sys): phase marks stay meaningful on
-        # a host whose wall-clock is storm-inflated — cpu measures the work
-        with open("/proc/stat") as f:
-            p = f.readline().split()[1:]
-        return (int(p[0]) + int(p[2])) / 100.0
+        if source_format == "saved":
+            parsed = _saved_records(spark, files).withColumn("day", F.to_date("warc_ts"))
+        else:
+            pages = spark.read.parquet(*files)
+            parsed = parse_pages(pages).withColumn("day", F.to_date("warc_ts"))
+        parsed.persist(StorageLevel.MEMORY_AND_DISK)
 
-    _t0, _c0 = time.time(), _cpu_now()
-    _marks: list[tuple[str, float, float]] = []
+        ok = parsed.filter(F.col("status") == "ok")
+        # idempotent error sink: an exact-duplicate malformed page (same url,
+        # same bytes — datagen's i%13==6 class) parses to byte-identical error
+        # rows; re-ingesting it must not double the error sink any more than
+        # the hash dedup lets it double the ok sink. Full-row distinct is the
+        # deterministic rule: only identical rows collapse, so two DIFFERENT
+        # malformed versions of one url (same (url, seq), different text) both
+        # survive. Cheap at scale: errors are a thin slice and the all-column
+        # HashAggregate collapses duplicates map-side before the shuffle.
+        errors = parsed.filter(F.col("status") != "ok").dropDuplicates()
+        kept, _ = split_duplicates(ok)
 
-    def _mark(phase: str) -> None:
-        if os.environ.get("LSS_TIMING"):
-            _marks.append((phase, time.time(), _cpu_now()))
+        # ONE aggregation materializes the persist and yields every driver-side
+        # number the rest of the batch needs (ts-range gate + ingest counters);
+        # page count = rows with seq 0 (the parser emits >= 1 record per page)
+        is_ok = F.when(F.col("status") == "ok", 1).otherwise(0)
+        st = parsed.agg(
+            F.min(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("lo"),
+            F.max(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("hi"),
+            F.sum(is_ok).alias("n_ok"),
+            F.sum(F.when(F.col("seq") == 0, 1).otherwise(0)).alias("n_pages"),
+        ).collect()[0]
+        ts_range = (st["lo"], st["hi"]) if st["lo"] is not None else None
+        n_ok = st["n_ok"] or 0
+        n_pages = st["n_pages"] or 0
+        _mark("parse+stats")
 
-    if source_format == "saved":
-        parsed = _saved_records(spark, files).withColumn("day", F.to_date("warc_ts"))
-    else:
-        pages = spark.read.parquet(*files)
-        parsed = parse_pages(pages).withColumn("day", F.to_date("warc_ts"))
-    parsed.persist(StorageLevel.MEMORY_AND_DISK)
+        kept = anti_join_committed(kept, _committed_keys(wh, ts_range))
 
-    ok = parsed.filter(F.col("status") == "ok")
-    # idempotent error sink: an exact-duplicate malformed page (same url,
-    # same bytes — datagen's i%13==6 class) parses to byte-identical error
-    # rows; re-ingesting it must not double the error sink any more than
-    # the hash dedup lets it double the ok sink. Full-row distinct is the
-    # deterministic rule: only identical rows collapse, so two DIFFERENT
-    # malformed versions of one url (same (url, seq), different text) both
-    # survive. Cheap at scale: errors are a thin slice and the all-column
-    # HashAggregate collapses duplicates map-side before the shuffle.
-    errors = parsed.filter(F.col("status") != "ok").dropDuplicates()
-    kept, _ = split_duplicates(ok)
+        routed = with_sink(
+            enrich(kept.unionByName(errors), lang_lookup, domain_lookup)
+        ).withColumn("batch", F.lit(batch_id))
 
-    # ONE aggregation materializes the persist and yields every driver-side
-    # number the rest of the batch needs (ts-range gate + ingest counters);
-    # page count = rows with seq 0 (the parser emits >= 1 record per page)
-    is_ok = F.when(F.col("status") == "ok", 1).otherwise(0)
-    st = parsed.agg(
-        F.min(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("lo"),
-        F.max(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("hi"),
-        F.sum(is_ok).alias("n_ok"),
-        F.sum(F.when(F.col("seq") == 0, 1).otherwise(0)).alias("n_pages"),
-    ).collect()[0]
-    ts_range = (st["lo"], st["hi"]) if st["lo"] is not None else None
-    n_ok = st["n_ok"] or 0
-    n_pages = st["n_pages"] or 0
-    _mark("parse+stats")
+        # ingest counters (A4) ride the write job as observed metrics — the
+        # reference counts added/duplicates on the ingest pass itself
+        # (MemoryWiseLogWrapper.scala:97-111); no extra job, no read-back
+        obs = Observation(f"ingest_{batch_id}")
+        routed = routed.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_routed"),
+            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_added"),
+        )
 
-    kept = anti_join_committed(kept, _committed_keys(wh, ts_range))
+        # defuse hot-sink skew: spread each output partition across `salt`
+        # reducers. Keeping reducer keys aligned with the output partition
+        # columns bounds the file count at |dirs| * salt (a hash-partitioned
+        # shuffle that ignores the output layout would make every reducer write
+        # every directory — thousands of tiny files). When previous batches'
+        # partials exist, the salt adapts to the OBSERVED per-sink volume
+        # (uniform salt gives the coldest sink as many file slots as the
+        # hottest): the hot sink gets proportionally more reducers, cold sinks
+        # collapse to one file, total reducer groups stay ~|sinks| * salt.
+        out = routed.repartition(
+            F.col("sink"), F.pmod(F.hash("url"), _salt_expr(wh, salt, total_bytes))
+        )
+        out.write.mode("append").partitionBy("batch", "sink").parquet(wh.path(RECORDS))
+        _mark("write")
 
-    routed = with_sink(
-        enrich(kept.unionByName(errors), lang_lookup, domain_lookup)
-    ).withColumn("batch", F.lit(batch_id))
+        # read the just-written batch partition back (small, column-pruned):
+        # (a) append its dedup keys to the day-partitioned keys table — the
+        #     .hash index file of this "segment" (HeaderStorage.scala:283-288);
+        # (b) fold its partial aggregates (mergeable: sums/min/max + HLL sketch
+        #     registers) into metrics_partials for incremental refresh.
+        batch_dir = os.path.join(wh.path(RECORDS), f"batch={batch_id}")
+        if not os.path.isdir(batch_dir):
+            # zero-ROUTED batch: nothing written. Reachable only when every
+            # parseable record was a cross-batch duplicate AND no error rows
+            # existed — so duplicates = n_ok, errors = 0. Still commit lineage
+            # so resume skips it.
+            parsed.unpersist()
+            wh.write_small(
+                [(batch_id, n_pages, 0, int(n_ok), 0, time.time())],
+                INGEST_SCHEMA,
+                METRICS_INGEST,
+                filename=batch_id,
+            )
+            wh.write_small(
+                [(batch_id, u, "committed", n_pages, time.time()) for u in files],
+                LINEAGE_SCHEMA,
+                LINEAGE,
+                filename=batch_id,
+            )
+            return BatchResult(batch_id, files, 0, int(n_ok), 0)
 
-    # ingest counters (A4) ride the write job as observed metrics — the
-    # reference counts added/duplicates on the ingest pass itself
-    # (MemoryWiseLogWrapper.scala:97-111); no extra job, no read-back
-    obs = Observation(f"ingest_{batch_id}")
-    routed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_routed"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_added"),
-    )
+        # reading the observation on a zero-row write job fails JVM-side (no
+        # metrics row) — only reached here when the batch wrote data
+        got = obs.get
+        added = int(got["n_added"] or 0)
+        n_errors = int(got["n_routed"] or 0) - added
+        # covers in-batch AND cross-batch dups — the reference counts both
+        n_dups = int(n_ok) - added
+        # ONE scan of the batch partition feeds BOTH readbacks: project to the
+        # 9 thin columns they jointly need (never the wide text) and persist —
+        # without this, keys and partials each re-open every file in the
+        # partition. The cache is O(batch x 9 thin cols), spill-safe.
+        written = (
+            spark.read.parquet(batch_dir)
+            .select(
+                "table", "record_id", "record_hash", "ts_millis", "status",
+                "sink", "warc_ts", "n_bytes", "url",
+            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
 
-    # defuse hot-sink skew: spread each output partition across `salt`
-    # reducers. Keeping reducer keys aligned with the output partition
-    # columns bounds the file count at |dirs| * salt (a hash-partitioned
-    # shuffle that ignores the output layout would make every reducer write
-    # every directory — thousands of tiny files). When previous batches'
-    # partials exist, the salt adapts to the OBSERVED per-sink volume
-    # (uniform salt gives the coldest sink as many file slots as the
-    # hottest): the hot sink gets proportionally more reducers, cold sinks
-    # collapse to one file, total reducer groups stay ~|sinks| * salt.
-    out = routed.repartition(
-        *[F.col(c) for c in partition_cols],
-        F.pmod(F.hash("url"), _salt_expr(wh, salt, partition_cols, total_bytes)),
-    )
-    out.write.mode("append").partitionBy("batch", *partition_cols).parquet(wh.path(RECORDS))
-    _mark("write")
+        def _write_keys():
+            # keys-table day MUST derive from ts_millis (the record-header ts
+            # the dedup hash folds), NOT the records table's warc_ts capture
+            # day: the anti-join prunes day with ts_millis bounds, and a
+            # committed duplicate whose capture day differs from its header-ts
+            # day would otherwise be pruned out of the committed side and
+            # re-ingested. floor-div keeps the mapping timezone-free
+            # (date_from_unix_date is pure day arithmetic, no session tz).
+            layout = _keys_table(wh)
+            layout.insert(
+                written.filter(F.col("status") == "ok")
+                .withColumn("batch", F.lit(batch_id))
+                .withColumn("day", _ts_day(F.col("ts_millis"))),
+                layout.name,
+            )
 
-    # read the just-written batch partition back (small, column-pruned):
-    # (a) append its dedup keys to the day-partitioned keys table — the
-    #     .hash index file of this "segment" (HeaderStorage.scala:283-288);
-    # (b) fold its partial aggregates (mergeable: sums/min/max + HLL sketch
-    #     registers) into metrics_partials for incremental refresh.
-    batch_dir = os.path.join(wh.path(RECORDS), f"batch={batch_id}")
-    if not os.path.isdir(batch_dir):
-        # zero-ROUTED batch: nothing written. Reachable only when every
-        # parseable record was a cross-batch duplicate AND no error rows
-        # existed — so duplicates = n_ok, errors = 0. Still commit lineage
-        # so resume skips it.
+        def _collect_partials():
+            return (
+                written.withColumn("window_start", F.window("warc_ts", "1 day")["start"])
+                .groupBy("sink", "window_start")
+                .agg(
+                    F.count("*").alias("n_rows"),
+                    F.sum(is_ok).alias("n_ok"),
+                    F.min("ts_millis").alias("min_ts"),
+                    F.max("ts_millis").alias("max_ts"),
+                    F.sum("n_bytes").alias("total_bytes"),
+                    F.hll_sketch_agg("url").alias("url_sketch"),
+                )
+                .collect()
+            )
+
+        # both read-backs scan the same small batch partition and are
+        # independent — submit them as CONCURRENT Spark jobs (the scheduler is
+        # thread-safe), halving this leg of the per-batch serial floor
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(2) as pool:
+            f_keys = pool.submit(_write_keys)
+            f_partials = pool.submit(_collect_partials)
+            f_keys.result()
+            partials = f_partials.result()
         parsed.unpersist()
+        written.unpersist()
+        _mark("readbacks")
         wh.write_small(
-            [(batch_id, n_pages, 0, int(n_ok), 0, time.time())],
+            [
+                (batch_id, r["sink"], r["window_start"], r["n_rows"], r["n_ok"],
+                 r["min_ts"], r["max_ts"], r["total_bytes"], bytes(r["url_sketch"]))
+                for r in partials
+            ],
+            PARTIALS_SCHEMA,
+            METRICS_PARTIALS,
+            filename=batch_id,
+        )
+        wh.write_small(
+            [(batch_id, n_pages, added, n_dups, n_errors, time.time())],
             INGEST_SCHEMA,
             METRICS_INGEST,
             filename=batch_id,
@@ -806,171 +880,42 @@ def _run_batch_inner(
             LINEAGE,
             filename=batch_id,
         )
-        return BatchResult(batch_id, files, 0, int(n_ok), 0)
+        _mark("bookkeeping")
+        if os.environ.get("LSS_TIMING"):
+            import sys
 
-    # reading the observation on a zero-row write job fails JVM-side (no
-    # metrics row) — only reached here when the batch wrote data
-    got = obs.get
-    added = int(got["n_added"] or 0)
-    n_errors = int(got["n_routed"] or 0) - added
-    # covers in-batch AND cross-batch dups — the reference counts both
-    n_dups = int(n_ok) - added
-    # ONE scan of the batch partition feeds BOTH readbacks: project to the
-    # 9 thin columns they jointly need (never the wide text) and persist —
-    # without this, keys and partials each re-open every file in the
-    # partition. The cache is O(batch x 9 thin cols), spill-safe.
-    written = (
-        spark.read.parquet(batch_dir)
-        .select(
-            "table", "record_id", "record_hash", "ts_millis", "status",
-            "sink", "warc_ts", "n_bytes", "url",
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    def _write_keys():
-        # keys-table day MUST derive from ts_millis (the record-header ts the
-        # dedup hash folds), NOT the records table's warc_ts capture day: the
-        # anti-join prunes day with ts_millis bounds, and a committed
-        # duplicate whose capture day differs from its header-ts day would
-        # otherwise be pruned out of the committed side and re-ingested.
-        # floor-div keeps the mapping timezone-free (date_from_unix_date is
-        # pure day arithmetic, no session-tz dependence).
-        keys = (
-            written.filter(F.col("status") == "ok")
-            .select("table", "record_id", "record_hash", "ts_millis")
-            .withColumn("day", _ts_day(F.col("ts_millis")))
-        )
-        name = _keys_table(wh)
-        if name:
-            # bucketed insert: pre-cluster reducers on (day, bucket id) —
-            # pmod(hash(col), B) IS Spark's bucket-id function
-            # (HashPartitioning.partitionIdExpression), so each reducer
-            # holds exactly one (day, bucket) and writes ONE file into it
-            buckets = int(open(os.path.join(wh.root, "records_keys.bucketed")).read())
-            (
-                keys.withColumn("batch", F.lit(batch_id))
-                .select("table", "record_id", "record_hash", "ts_millis", "batch", "day")
-                .repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(buckets)))
-                .write.insertInto(name)
-            )
-        else:  # legacy (pre-bucketing) warehouse layout
-            (
-                keys.repartition("day")
-                .write.mode("append")
-                .partitionBy("day")
-                .parquet(os.path.join(wh.path(RECORDS_KEYS), f"batch={batch_id}"))
-            )
-
-    def _collect_partials():
-        return (
-            written.withColumn("window_start", F.window("warc_ts", "1 day")["start"])
-            .groupBy("sink", "window_start")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum(is_ok).alias("n_ok"),
-                F.min("ts_millis").alias("min_ts"),
-                F.max("ts_millis").alias("max_ts"),
-                F.sum("n_bytes").alias("total_bytes"),
-                F.hll_sketch_agg("url").alias("url_sketch"),
-            )
-            .collect()
-        )
-
-    # both read-backs scan the same small batch partition and are
-    # independent — submit them as CONCURRENT Spark jobs (the scheduler is
-    # thread-safe), halving this leg of the per-batch serial floor
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as pool:
-        f_keys = pool.submit(_write_keys)
-        f_partials = pool.submit(_collect_partials)
-        f_keys.result()
-        partials = f_partials.result()
-    parsed.unpersist()
-    written.unpersist()
-    _mark("readbacks")
-    wh.write_small(
-        [
-            (batch_id, r["sink"], r["window_start"], r["n_rows"], r["n_ok"],
-             r["min_ts"], r["max_ts"], r["total_bytes"], bytes(r["url_sketch"]))
-            for r in partials
-        ],
-        PARTIALS_SCHEMA,
-        METRICS_PARTIALS,
-        filename=batch_id,
-    )
-    wh.write_small(
-        [(batch_id, n_pages, added, n_dups, n_errors, time.time())],
-        INGEST_SCHEMA,
-        METRICS_INGEST,
-        filename=batch_id,
-    )
-    wh.write_small(
-        [(batch_id, u, "committed", n_pages, time.time()) for u in files],
-        LINEAGE_SCHEMA,
-        LINEAGE,
-        filename=batch_id,
-    )
-    _mark("bookkeeping")
-    if os.environ.get("LSS_TIMING"):
-        import sys
-
-        prev, cprev = _t0, _c0
-        spans = []
-        for phase, at, c in _marks:
-            spans.append(f"{phase}={at - prev:.2f}s/{c - cprev:.1f}cpu")
-            prev, cprev = at, c
-        print(f"[timing] {batch_id}: " + " ".join(spans), file=sys.stderr)
-    return BatchResult(batch_id, files, added, n_dups, n_errors)
+            prev, cprev = _t0, _c0
+            spans = []
+            for phase, at, c in _marks:
+                spans.append(f"{phase}={at - prev:.2f}s/{c - cprev:.1f}cpu")
+                prev, cprev = at, c
+            print(f"[timing] {batch_id}: " + " ".join(spans), file=sys.stderr)
+        return BatchResult(batch_id, files, added, n_dups, n_errors)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def refresh_aggregates(spark: SparkSession, wh: Warehouse, exact: bool = False) -> None:
-    """Rebuild the per-sink + windowed aggregate tables (A1-A3).
-
-    Default path MERGES the per-batch partials — sums/min/max add up,
-    distinct-url sketches merge via ``hll_union_agg`` — reading only
-    O(batches x sinks x days) bookkeeping rows. Per-sink distinct-key
-    count equals the per-sink ok-row count by the dedup invariant (every
-    committed ok row holds a globally unique key). ``exact=True`` is the
-    slow path: one GROUPING SETS rescan of the records table with exact
-    countDistinct (kept for audits; it is what round 1 always did).
+def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:
+    """Rebuild the per-sink + windowed aggregate tables (A1-A3) by MERGING
+    the per-batch partials — sums/min/max add up, distinct-url sketches
+    merge via ``hll_union_agg`` — reading only O(batches x sinks x days)
+    bookkeeping rows, never the records table. Per-sink distinct-key count
+    equals the per-sink ok-row count by the dedup invariant (every committed
+    ok row holds a globally unique key). The merge covers every committed
+    row: a batch that writes records writes its partials before its lineage
+    row. With no partials yet both tables are written empty, schemas intact.
     """
-    use_exact = exact or not wh.exists(METRICS_PARTIALS)
-    if not use_exact:
-        # merged results are only complete if EVERY committed batch with
-        # data contributed partials — a legacy (round-1) warehouse has
-        # committed batches that predate the partials table; merging would
-        # silently drop their rows from the published aggregates
-        have = {
-            r["batch"]
-            for r in wh.read(METRICS_PARTIALS).select("batch").distinct().collect()
-        }
-        with_data = {
-            os.path.basename(d).split("=", 1)[1]
-            for d in glob.glob(os.path.join(wh.path(RECORDS), "batch=*"))
-        }
-        if (set(_committed_batches(wh)) & with_data) - have:
-            use_exact = True
-    if use_exact:
-        from log_server_spark.operators.aggregate import combined_stats
-
-        _status, sink_rows, windowed_rows = combined_stats(wh.read(RECORDS))
-        sink_out = [
-            (r["sink"], r["n_rows"], r["n_keys"], r["n_urls_approx"],
-             r["min_ts"], r["max_ts"], r["total_bytes"])
-            for r in sink_rows
-        ]
-        win_out = [
-            (r["window_start"], r["sink"], r["n_rows"], r["n_urls_approx"])
-            for r in windowed_rows
-        ]
-    else:
+    sink_out, win_out = [], []
+    if wh.exists(METRICS_PARTIALS):
         # ONE grouping-sets merge job over the tiny partials table yields
         # both the per-sink and the per-(window, sink) rollups
-        p = wh.read(METRICS_PARTIALS)
         rows = (
-            p.groupingSets([["sink"], ["window_start", "sink"]], "sink", "window_start")
+            wh.read(METRICS_PARTIALS)
+            .groupingSets([["sink"], ["window_start", "sink"]], "sink", "window_start")
             .agg(
                 F.sum("n_rows").alias("n_rows"),
                 F.sum("n_ok").alias("n_keys"),
@@ -983,16 +928,14 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse, exact: bool = False) 
             .collect()
         )
         # gid bits follow (sink, window_start): 0b01 = window aggregated out
-        sink_rows = [r for r in rows if r["gid"] == 0b01]
-        windowed_rows = [r for r in rows if r["gid"] == 0b00]
         sink_out = [
             (r["sink"], r["n_rows"], r["n_keys"], r["n_urls_approx"],
              r["min_ts"], r["max_ts"], r["total_bytes"])
-            for r in sink_rows
+            for r in rows if r["gid"] == 0b01
         ]
         win_out = [
             (r["window_start"], r["sink"], r["n_rows"], r["n_urls_approx"])
-            for r in windowed_rows
+            for r in rows if r["gid"] == 0b00
         ]
     for name in (METRICS_SINK, METRICS_WINDOWED):
         wh.drop(name)
@@ -1017,15 +960,12 @@ def run_pipeline(
     salt: int = 8,
     resume: bool = True,
     aggregates: bool = True,
-    partition_cols: tuple[str, ...] = ("sink",),
     max_batches: int | None = None,
     lock_timeout: float = 60.0,
     source_format: str = "pages",
 ) -> list[BatchResult]:
-    """``partition_cols`` is the sink-table layout. Default ``("sink",)``;
-    add ``"day"`` for date-pruned layouts when per-partition volume is large
-    enough that dir_count * salt files stay near the target file size (the
-    right call at the 100 TB design point, wasteful below ~10 GB/day)."""
+    """Ingest every not-yet-committed batch of ``pages_dir`` into the
+    warehouse under its lock, then refresh the aggregate tables."""
     wh = Warehouse(warehouse_root, spark)
     base = os.path.dirname(pages_dir.rstrip("/"))
     # lookup dims are optional (a `.saved` migration dir has none): a
@@ -1082,39 +1022,10 @@ def run_pipeline(
             results.append(
                 run_batch(
                     spark, wh, batch_id, files, lang_lookup, domain_lookup,
-                    salt=salt, partition_cols=partition_cols,
-                    source_format=source_format,
+                    salt=salt, source_format=source_format,
                 )
             )
         if aggregates and (results or wh.exists(RECORDS)):
             refresh_aggregates(spark, wh)
     return results
 
-
-if __name__ == "__main__":
-    import argparse
-
-    from log_server_spark.session import get_spark
-
-    ap = argparse.ArgumentParser(description="parse→enrich→route→aggregate DAG")
-    ap.add_argument("--pages-dir", help="dir of pages parquet parts")
-    ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--generate", type=int, default=0, help="generate N synthetic pages first")
-    ap.add_argument("--data-dir", default="/tmp/lss_data")
-    ap.add_argument("--batch-files", type=int, default=4)
-    ap.add_argument("--salt", type=int, default=8)
-    ap.add_argument("--master", default=None)
-    a = ap.parse_args()
-
-    pages_dir = a.pages_dir
-    if a.generate:
-        from log_server_spark.datagen import write_dataset
-
-        write_dataset(a.data_dir, n=a.generate)
-        pages_dir = os.path.join(a.data_dir, "pages")
-
-    sp = get_spark(master=a.master, app_name="lss-pipeline")
-    res = run_pipeline(sp, pages_dir, a.warehouse, batch_files=a.batch_files, salt=a.salt)
-    for r in res:
-        print(f"{r.batch}: added={r.added} duplicates={r.duplicates} errors={r.errors}")
-    sp.stop()

@@ -66,21 +66,27 @@ def test_archive_preserves_get(spark, env, capsys):
 def test_fresh_warehouse_update_logs_no_stack_trace(tmp_path):
     """A first `update` into an empty warehouse is the normal case: it must
     not log a FileNotFoundException (the keys table LOCATION has to exist
-    before CREATE TABLE)."""
+    before the table is created). Neither may the first `archive`, whose
+    keys compaction builds a second bucketed table in a new directory."""
     import subprocess
     import sys
 
     data = str(tmp_path / "data")
     write_dataset(data, seed=3, n=40, num_files=1)
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [
-            sys.executable, "-m", "log_server_spark.cli", "--master", "local[2]",
-            "update", "--warehouse", str(tmp_path / "wh"),
-            "--pages-dir", os.path.join(data, "pages"),
-        ],
-        cwd=repo, capture_output=True, text=True, timeout=600,
-    )
+    wh = str(tmp_path / "wh")
+
+    def cli(*args):
+        return subprocess.run(
+            [sys.executable, "-m", "log_server_spark.cli", "--master", "local[2]", *args],
+            cwd=repo, capture_output=True, text=True, timeout=600,
+        )
+
+    proc = cli("update", "--warehouse", wh, "--pages-dir", os.path.join(data, "pages"))
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "b00000: added=" in proc.stdout
+    assert "FileNotFoundException" not in proc.stderr
+    proc = cli("archive", "--warehouse", wh)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1])["archived"] == ["b00000"]
     assert "FileNotFoundException" not in proc.stderr

@@ -233,3 +233,26 @@ def test_relative_warehouse_path(spark, tmp_path, monkeypatch):
     assert replay.added == 0
     assert replay.duplicates == first.added + first.duplicates
     assert os.path.isdir(tmp_path / "wh" / "records_keys" / "batch=b00000")
+
+
+@pytest.mark.slow
+def test_zero_routed_update_writes_empty_aggregates(spark, tmp_path):
+    """An update whose only unit holds no pages routes nothing: it commits
+    one empty batch and still publishes both aggregate tables, empty and
+    with their schemas."""
+    import pyarrow.parquet as pq
+
+    from log_server_spark.plans.pipeline import METRICS_SINK, METRICS_WINDOWED
+
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    pq.write_table(gen_pages(seed=SEED, n=10).slice(0, 0), str(pages / "part-00000.parquet"))
+    results = run_pipeline(spark, str(pages), str(tmp_path / "wh"))
+    assert [(r.added, r.duplicates, r.errors) for r in results] == [(0, 0, 0)]
+    wh = Warehouse(str(tmp_path / "wh"), spark)
+    sink_stats = wh.read(METRICS_SINK)
+    assert sink_stats.count() == 0
+    assert "n_keys" in sink_stats.columns
+    windowed = wh.read(METRICS_WINDOWED)
+    assert windowed.count() == 0
+    assert "window_start" in windowed.columns

@@ -1,5 +1,5 @@
 """Round-4 regressions: VERDICT r3 items #3/#6/#7 and the ADVICE r3 fixes
-(legacy keys-day prune soundness, saved-format truncation errors, sliced-
+(pre-bucketing warehouses refused, saved-format truncation errors, sliced-
 array _ascii_mask, per-user native cache)."""
 
 import glob
@@ -82,8 +82,7 @@ def test_no_rdd_probe_in_query_construction():
 
 
 # ---------------------------------------------------------------------------
-# ADVICE: legacy (pre-bucketing) warehouses must not day-prune with
-# record-ts bounds over capture-day partitions
+# ADVICE: a legacy (pre-bucketing) warehouse is refused, not read another way
 # ---------------------------------------------------------------------------
 
 
@@ -101,11 +100,10 @@ def _write_pages_unit(path, rows):
 
 
 @pytest.mark.slow
-def test_legacy_warehouse_skips_unsound_day_prune(spark, tmp_path_factory):
-    """Simulate a round-1 warehouse whose records_keys day= partitions were
-    written from the CAPTURE day: the committed duplicate must still be
-    caught even though its (wrong) day partition lies outside the new
-    batch's record-ts window."""
+def test_pre_bucketing_warehouse_is_refused(spark, tmp_path_factory):
+    """A warehouse whose records_keys predate the bucketed layout (no
+    bucketing marker) is refused with a clear error instead of being read
+    through another layout, and nothing is written."""
     base = str(tmp_path_factory.mktemp("r4_legacy"))
     pages = os.path.join(base, "pages")
     os.makedirs(pages)
@@ -133,32 +131,19 @@ def test_legacy_warehouse_skips_unsound_day_prune(spark, tmp_path_factory):
     assert r1[0].added == 1
     wh = Warehouse(wh_dir, spark)
 
-    # doctor the warehouse into the round-1 legacy layout: no bucketing
-    # marker, keys day= partition named by the CAPTURE day (2024-05-15),
-    # not the record-header day (2024-03-01)
+    # doctor the warehouse into the pre-bucketing layout: no marker, and no
+    # bucketed table registered in the session catalog
     os.remove(os.path.join(wh_dir, "records_keys.bucketed"))
-    from log_server_spark.plans.pipeline import _keys_desync
+    from log_server_spark.plans.pipeline import _keys_desync, _KeysLayout
 
     _keys_desync(wh)
-    spark.sql("DROP TABLE IF EXISTS " + _legacy_keys_name(wh_dir))
-    batch_dirs = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*"))
-    assert len(batch_dirs) == 1
-    day_dirs = glob.glob(os.path.join(batch_dirs[0], "day=*"))
-    assert len(day_dirs) == 1 and day_dirs[0].endswith("day=2024-03-01")
-    os.rename(day_dirs[0], os.path.join(batch_dirs[0], "day=2024-05-15"))
+    spark.sql("DROP TABLE IF EXISTS " + _KeysLayout.table_name(wh))
+    before = {tuple(r) for r in wh.read(RECORDS).select("url", "seq", "batch").collect()}
 
-    r2 = run_pipeline(spark, pages, wh_dir, batch_files=1)
-    assert len(r2) == 1
-    assert r2[0].added == 1, "only the genuinely new record"
-    assert r2[0].duplicates == 1, "legacy dup caught despite capture-day partitions"
-    ok = wh.read(RECORDS).filter(F.col("status") == "ok")
-    assert ok.count() == 2
-
-
-def _legacy_keys_name(root: str) -> str:
-    import hashlib
-
-    return f"records_keys_{hashlib.md5(root.encode()).hexdigest()[:10]}"
+    with pytest.raises(RuntimeError, match="predates the bucketed keys layout"):
+        run_pipeline(spark, pages, wh_dir, batch_files=1)
+    after = {tuple(r) for r in wh.read(RECORDS).select("url", "seq", "batch").collect()}
+    assert after == before
 
 
 # ---------------------------------------------------------------------------
