@@ -16,6 +16,7 @@ import glob
 import os
 import shutil
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,6 +35,15 @@ class ArchivedBatchError(RuntimeError):
     must fail loudly instead of silently rewriting compacted data."""
 
 
+class RowCountMismatch(RuntimeError):
+    """A rebuilt table's row count differs from the one it replaces; the
+    build was discarded and the live table is untouched."""
+
+    def __init__(self, name: str, want: int, got: int):
+        super().__init__(f"{name} rebuild row count mismatch: {want} -> {got}; aborted")
+        self.want, self.got = want, got
+
+
 class Warehouse:
     def __init__(self, root: str, spark: SparkSession):
         # absolute: table LOCATIONs resolve a relative path against the
@@ -42,13 +52,12 @@ class Warehouse:
         self.spark = spark
         os.makedirs(root, exist_ok=True)
 
-    def _recover_interrupted_archive(self) -> None:
-        """Finish any crashed table swap (``archive``'s records compaction or
-        a bookkeeping rewrite, see ``swap_in``): the swap protocol is
-        rename(T -> T.old); rename(T.<tmp> -> T); rm(T.old) — a crash leaves
-        either both T and T.old (drop the old copy) or only T.old (restore
-        it). Stale build dirs (``*.rewrite``/``*.compact`` next to a live
-        table) are incomplete builds and are discarded.
+    def _recover_interrupted_rebuild(self) -> None:
+        """Finish any crashed table swap (see ``rebuild``): the swap protocol
+        is rename(T -> T.old); rename(T.rewrite -> T); rm(T.old) — a crash
+        leaves either both T and T.old (drop the old copy) or only T.old
+        (restore it). A stale ``T.rewrite`` next to a live table is an
+        incomplete build and is discarded.
 
         Runs on LOCK ACQUISITION, never unlocked: an unlocked recovery could
         "finish" a swap another process is legitimately mid-way through
@@ -60,20 +69,34 @@ class Warehouse:
                 shutil.rmtree(old)
             else:
                 os.rename(old, base)
-        for suffix in (".rewrite", ".compact"):
-            for tmp in glob.glob(os.path.join(self.root, "*" + suffix)):
-                if os.path.isdir(tmp[: -len(suffix)]):
-                    shutil.rmtree(tmp)
+        for tmp in glob.glob(os.path.join(self.root, "*.rewrite")):
+            if os.path.isdir(tmp[: -len(".rewrite")]):
+                shutil.rmtree(tmp)
 
-    def swap_in(self, name: str, build_dir: str) -> None:
-        """Atomically-enough replace table ``name`` with the fully-built
-        ``build_dir``: ``name`` is never absent without ``name.old`` present,
-        so a crash at any point is recoverable on the next lock acquisition.
+    def rebuild(
+        self, name: str, write: Callable[[str], None], want_rows: int | None = None,
+        schema: str | None = None,
+    ) -> None:
+        """The only way a table is rewritten: ``write(build_dir)`` builds the
+        replacement in ``<name>.rewrite``; with ``want_rows`` the build is
+        counted (read with ``schema`` if given, skipping schema inference)
+        and a mismatch discards it and raises ``RowCountMismatch``; then it
+        is swapped in. ``name`` is never absent without ``name.old``, so a
+        crash at any point is recovered on the next lock acquisition.
         Caller must hold the warehouse lock."""
         d = self.path(name)
+        build = d + ".rewrite"
+        shutil.rmtree(build, ignore_errors=True)
+        write(build)
+        if want_rows is not None:
+            reader = self.spark.read.schema(schema) if schema else self.spark.read
+            got = reader.parquet(build).count()
+            if got != want_rows:
+                shutil.rmtree(build)
+                raise RowCountMismatch(name, want_rows, got)
         old = d + ".old"
         os.rename(d, old)
-        os.rename(build_dir, d)
+        os.rename(build, d)
         shutil.rmtree(old)
 
     @contextlib.contextmanager
@@ -127,7 +150,7 @@ class Warehouse:
                     ) from None
                 time.sleep(poll)
         try:
-            self._recover_interrupted_archive()
+            self._recover_interrupted_rebuild()
             yield self
         finally:
             with contextlib.suppress(FileNotFoundError):
@@ -148,18 +171,6 @@ class Warehouse:
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
 
-    def write(
-        self,
-        df: DataFrame,
-        name: str,
-        mode: str = "append",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
-
     def write_small(
         self, rows: list[tuple], schema_ddl: str, name: str, filename: str | None = None
     ) -> None:
@@ -173,8 +184,6 @@ class Warehouse:
         a reprocessed batch overwrites its own bookkeeping file instead of
         appending a duplicate row.
         """
-        import time as _time
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -195,7 +204,7 @@ class Warehouse:
         tbl = pa.table({f.name: pa.array(list(c), f.type) for f, c in zip(schema, cols)})
         d = self.path(name)
         os.makedirs(d, exist_ok=True)
-        tag = filename if filename is not None else f"{_time.time_ns():020d}"
+        tag = filename if filename is not None else f"{time.time_ns():020d}"
         pq.write_table(tbl, os.path.join(d, f"part-{tag}.parquet"))
 
     def drop(self, name: str) -> None:

@@ -23,38 +23,21 @@ import os
 import sys
 
 
-def _session(master):
-    """getOrCreate, remembering whether the CLI owns the session (it must
-    not stop a session an embedding process created)."""
-    from pyspark.sql import SparkSession
-
-    from log_server_spark.session import get_spark
-
-    existing = SparkSession.getActiveSession()
-    if existing is not None:
-        return existing, False
-    return get_spark(master=master, app_name="lss-cli"), True
-
-
-def cmd_update(args) -> int:
+def cmd_update(spark, args) -> int:
     from log_server_spark.plans.pipeline import run_pipeline
 
-    spark, owned = _session(args.master)
     results = run_pipeline(
         spark, args.pages_dir, args.warehouse,
-        batch_files=args.batch_files, salt=args.salt,
-        source_format=getattr(args, "format", "pages"),
+        batch_files=args.batch_files, salt=args.salt, source_format=args.format,
     )
     for r in results:
         print(f"{r.batch}: added={r.added} duplicates={r.duplicates} errors={r.errors}")
     if not results:
         print("nothing to do (all batches committed)")
-    if owned:
-        spark.stop()
     return 0
 
 
-def cmd_get(args) -> int:
+def cmd_get(spark, args) -> int:
     """Point lookup; repeat --warehouse for the reference's multi-year
     fan-out (GetCommand.scala:29-36: years.map(get).reduce(++) — a bag
     union across databases, results globally ts-sorted)."""
@@ -62,7 +45,6 @@ def cmd_get(args) -> int:
 
     from log_server_spark.operators.lookup import get_records, to_json_records
 
-    spark, owned = _session(args.master)
     parts = [
         get_records(spark.read.parquet(os.path.join(w, "records")), args.table, args.id)
         for w in args.warehouse
@@ -70,15 +52,12 @@ def cmd_get(args) -> int:
     unioned = reduce(lambda a, b: a.unionByName(b), parts).orderBy("ts_millis")
     for row in to_json_records(unioned).collect():
         print(row["json"])
-    if owned:
-        spark.stop()
     return 0
 
 
-def cmd_info(args) -> int:
+def cmd_info(spark, args) -> int:
     from log_server_spark.operators.aggregate import info
 
-    spark, owned = _session(args.master)
     records = spark.read.parquet(os.path.join(args.warehouse, "records"))
     total = 0
     for row in info(records).collect():
@@ -88,100 +67,27 @@ def cmd_info(args) -> int:
             f"hashes={row['hashes']} minTs={row['min_ts']} maxTs={row['max_ts']}"
         )
     print(f"total: {total}")
-    if owned:
-        spark.stop()
     return 0
 
 
-def cmd_archive(args) -> int:
-    """Compact the records table: rewrite each (batch, sink) partition's
-    small files into ~target-size files. The parquet-local stand-in for
-    Iceberg ``rewrite_data_files`` / the reference's gzip-and-mark-readonly
-    (BigStorage.scala:338-350)."""
-    import glob
-    import shutil
+def cmd_archive(spark, args) -> int:
+    """Compact the warehouse and flip its batches read-only
+    (``pipeline.archive``), or with ``--unmark`` make batches writable
+    again."""
+    from log_server_spark.catalog import RowCountMismatch, Warehouse
+    from log_server_spark.plans.pipeline import archive
 
-    from pyspark.sql import functions as F
-
-    from log_server_spark.catalog import Warehouse
-
-    spark, owned = _session(args.master)
-    wh = Warehouse(args.warehouse, spark)  # also recovers a crashed prior swap
-    if getattr(args, "unmark", None) is not None:
+    if args.unmark is not None:
+        wh = Warehouse(args.warehouse, spark)
         ids = args.unmark or sorted(wh.archived_batches())
         left = wh.mark_archived(ids, unmark=True)
         print(json.dumps({"unmarked": sorted(ids), "still_archived": sorted(left)}))
-        if owned:
-            spark.stop()
         return 0
-    records_dir = wh.path("records")
-    tmp_dir = records_dir + ".compact"
-    # archive is where compression strength belongs (the reference keeps
-    # live segments uncompressed and gzips at archive time,
-    # BigStorage.scala:338-350): the ingest write uses zstd level 1 for
-    # wall speed, the compaction rewrite pays for density once
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "parquet.compression.codec.zstd.level", "6"
-    )
-    with wh.lock():
-        # sweep TORN batches FIRST: a crashed run's lineage-less batch dir
-        # must never be compacted into batch=archived or marked read-only —
-        # its orphaned keys would anti-join the reprocessed records away
-        # while the torn records themselves get deleted (data loss)
-        from log_server_spark.plans.pipeline import sweep_torn_batches
-
-        swept = sweep_torn_batches(wh)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        df = spark.read.parquet(records_dir)
-        n_before = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))
-        rows_before = df.count()
-        (
-            df.repartition(F.col("batch"), F.col("sink"))
-            .write.mode("overwrite")
-            .partitionBy("batch", "sink")
-            .parquet(tmp_dir)
-        )
-        rows_after = spark.read.parquet(tmp_dir).count()
-        if rows_after != rows_before:
-            shutil.rmtree(tmp_dir)
-            print(f"ABORT: row count mismatch {rows_before} -> {rows_after}", file=sys.stderr)
-            if owned:
-                spark.stop()
-            return 1
-        wh.swap_in("records", tmp_dir)
-        # compacted layout is history: flip every batch read-only so a later
-        # update with remapped ids fails loudly instead of rewriting it
-        # (the reference's archive gzips segments AND marks them readOnly)
-        archived = sorted(
-            os.path.basename(d).split("=", 1)[1]
-            for d in glob.glob(os.path.join(records_dir, "batch=*"))
-        )
-        wh.mark_archived(archived)
-        # archive EVERYTHING, index files included (BigStorage.scala:
-        # 338-350): merge the now-read-only batches' keys partitions to
-        # one file per (day, bucket) and their bookkeeping to one file
-        # per table. Merging erases per-batch attribution, which is only
-        # sound for read-only batches.
-        from log_server_spark.plans.pipeline import compact_bookkeeping, compact_keys
-
-        keys_stats = compact_keys(wh)
-        book_stats = compact_bookkeeping(wh, set(archived))
-    n_after = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))
-    print(
-        json.dumps(
-            {
-                "files_before": n_before,
-                "files_after": n_after,
-                "rows": rows_after,
-                "archived": archived,
-                "swept_torn": swept,
-                "keys": keys_stats,
-                "bookkeeping": book_stats,
-            }
-        )
-    )
-    if owned:
-        spark.stop()
+    try:
+        print(json.dumps(archive(spark, args.warehouse)))
+    except RowCountMismatch as e:
+        print(f"ABORT: row count mismatch {e.want} -> {e.got}", file=sys.stderr)
+        return 1
     return 0
 
 
@@ -223,7 +129,20 @@ def main(argv: list[str] | None = None) -> int:
     p.set_defaults(fn=cmd_archive)
 
     args = ap.parse_args(argv)
-    return args.fn(args)
+    from pyspark.sql import SparkSession
+
+    from log_server_spark.session import get_spark
+
+    # reuse an embedding process's session, and never stop one we did not make
+    spark = SparkSession.getActiveSession()
+    owned = spark is None
+    if owned:
+        spark = get_spark(master=args.master, app_name="lss-cli")
+    try:
+        return args.fn(spark, args)
+    finally:
+        if owned:
+            spark.stop()
 
 
 if __name__ == "__main__":

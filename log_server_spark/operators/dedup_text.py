@@ -6,7 +6,7 @@ each expressed scale-first:
 - exact: fingerprint groupBy (one shuffle of (hash, id) pairs only);
 - n-gram Jaccard: explode distinct shingles -> self-equi-join on shingle ->
   shared-count aggregation (never a cross join; co-partitioned by shingle);
-- MinHash + LSH: k universal-hash minima per doc (one explode + one groupBy),
+- MinHash + LSH: k universal-hash minima per doc (a per-row array projection),
   banded bucket join for candidates, exact Jaccard verify on candidates only;
 - SimHash: 64-bit signature via per-bit vote aggregation, near-dups by
   Hamming distance on bucketed signatures.
@@ -128,28 +128,6 @@ def ngram_jaccard_pairs(
     return out
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """k-permutation MinHash signature per doc.
-
-    h_i(x) = (a_i * (xxhash64(x) mod p) + b_i) mod p over a Mersenne prime —
-    the classic universal-hash family; coefficients are fixed constants so
-    signatures are stable across runs/clusters. Docs with no shingles are
-    dropped (too short to near-dup meaningfully).
-    """
-    sh = _shingle_frame(df, id_col, text_col, shingle_n).withColumn(
-        "b", F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE_P))
-    )
-    # the base hash is materialized ONCE per shingle row ("b"); inlining it
-    # into the k min-aggregates would evaluate it k times per row
-    aggs = [
-        F.min(F.pmod(F.lit(a) * F.col("b") + F.lit(b), F.lit(MERSENNE_P))).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
-    ]
-    return sh.groupBy("id").agg(*aggs)
-
-
 def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
     """The fixed universal-hash family (a_i odd, b_i) shared by both the
     xxhash64 production path and the md5 oracle path."""
@@ -159,30 +137,6 @@ def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
         b = (12345 + 987_654_321 * i) % MERSENNE_P
         out.append((a, b))
     return out
-
-
-def minhash_signatures_md5(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signatures with an md5-based base hash.
-
-    Same semantics as :func:`minhash_signatures` but the base hash is the
-    first 15 hex chars of md5(shingle) read as an integer — computable
-    identically in any engine with md5 (the SQL-oracle-checkable variant).
-    The production path keeps xxhash64 (one JVM op vs md5+substring+radix
-    conversion); use this one when cross-engine verifiability matters more
-    than the ~2x base-hash cost.
-    """
-    sh = _shingle_frame(df, id_col, text_col, shingle_n)
-    hex15 = F.substring(F.md5(F.encode(F.col("shingle"), "UTF-8")), 1, 15)
-    # materialize the (expensive) md5-derived base ONCE per shingle row —
-    # inlined, each of the k min-aggregates would recompute the md5
-    sh = sh.withColumn("b", F.pmod(F.conv(hex15, 16, 10).cast("long"), F.lit(MERSENNE_P)))
-    aggs = [
-        F.min(F.pmod(F.lit(a) * F.col("b") + F.lit(b), F.lit(MERSENNE_P))).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
-    ]
-    return sh.groupBy("id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -219,7 +173,7 @@ def minhash_lsh_pairs(
     against the corpus AND itself without re-pairing committed docs, so
     the band join is O(corpus x delta) band rows, not O(corpus^2). At the
     100 TB point the committed side's signatures come from a stored
-    signatures table (`minhash_signatures` written at ingest, the same
+    signatures table (``minhash_signature_frame`` written at ingest, the same
     lifecycle as records_keys) instead of the recompute this
     reference-twin form does; the band join and verify are unchanged.
     """
@@ -530,15 +484,8 @@ def components_from_pairs(
 
 
 def _base_hash_mod_p(col, base: str):
-    """Per-shingle universal-hash base ``b`` in [0, P): matches
-    minhash_signatures (xxhash64) / minhash_signatures_md5 (md5) exactly so
-    the combined sig+size aggregation yields identical signatures."""
-    if base == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(MERSENNE_P))
-    if base == "md5":
-        hex15 = F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15)
-        return F.pmod(F.conv(hex15, 16, 10).cast("long"), F.lit(MERSENNE_P))
-    raise ValueError(base)
+    """Per-shingle universal-hash base ``b`` in [0, P)."""
+    return F.pmod(_base_hash_expr(col, base), F.lit(MERSENNE_P))
 
 
 def _base_hash_expr(col, base: str):

@@ -2,8 +2,9 @@
 
 The Spark restatement of the reference's `update` ingest lifecycle
 (SURVEY.md §3.1) plus the north_rule additions (enrich, fan-out sinks,
-windowed aggregates, lineage/resume, skew salting). ``cli update`` is its
-command-line entry point.
+windowed aggregates, lineage/resume, skew salting), and ``archive``, which
+compacts it. ``cli update`` and ``cli archive`` are their command-line entry
+points.
 
 Warehouse layout (one layout; the reference likewise keeps one segment
 layout of ``.record`` data, ``.header`` offsets and ``.hash`` dedup index):
@@ -62,9 +63,11 @@ Scale properties:
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass
@@ -95,6 +98,28 @@ PARTIALS_SCHEMA = (
     "batch string, sink string, window_start timestamp, n_rows long, n_ok long, "
     "min_ts long, max_ts long, total_bytes long, url_sketch binary"
 )
+
+
+# parquet-java reads the zstd level from the write's Hadoop conf, into which
+# Spark copies the session's runtime SQL confs
+ZSTD_LEVEL = "parquet.compression.codec.zstd.level"
+
+
+@contextlib.contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime SQL confs for one job and restore the previous values on
+    exit, so unrelated work on the same session never inherits them."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @dataclass
@@ -161,53 +186,63 @@ def _committed_batches(wh: Warehouse) -> dict[str, frozenset]:
     return {b: frozenset(u) for b, u in out.items()}
 
 
-def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
-    """Drop one batch's rows from a tiny bookkeeping table's files that are
-    NOT named by batch id: the ``part-archive-*`` files ``compact_bookkeeping``
-    merges archived batches into. A batch dropped after ``archive --unmark``
-    has its rows there, not in a ``part-<batch>.parquet`` of its own.
-    Driver-side pyarrow rewrite — these tables are O(batches) rows.
+# a bookkeeping file named by its batch id; every other name is a merged
+# ``part-archive-*`` file (see ``_rewrite_bookkeeping``)
+_PER_BATCH_FILE = re.compile(r"part-(b\d{5})\.parquet$")
 
-    Only the merged files (not ``part-b*.parquet``) are read and rewritten:
-    folding per-batch files into the merged rewrite file would break
-    ``write_small``'s overwrite-idempotence — a reprocessed batch would
-    overwrite its own per-batch file while its old rows also lived on in the
-    merged file, double-counting forever.
 
-    Crash-recoverable: the filtered replacement is fully built in a sibling
-    ``<table>.rewrite`` dir (per-batch files hardlinked across unchanged),
-    then swapped in with the same rename protocol as ``archive`` (table ->
-    table.old; .rewrite -> table; rm table.old). A crash at any point leaves
-    either the old table intact or the swap completable — ``Warehouse``
-    recovery on lock acquisition finishes it.
+def _rewrite_bookkeeping(
+    wh: Warehouse, table: str, merge_batches: set[str], drop_batch: str | None = None
+) -> int:
+    """Rewrite a tiny bookkeeping table (driver-side pyarrow, O(batches)
+    rows) with its merged files and ``merge_batches``' per-batch files
+    folded into ONE ``part-archive-<ns>.parquet``, minus ``drop_batch``'s
+    rows; other per-batch files are hardlinked across. A no-op with <= 1
+    files to merge, or with ``drop_batch`` when no row is dropped. Returns
+    the table's file count afterwards. Live batches are never merged: a
+    reprocessed batch overwrites its own per-batch file, and its rows living
+    on in a merged file would double-count forever.
     """
-    import re
-
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    d = wh.path(table)
-    files = sorted(glob.glob(os.path.join(d, "*.parquet")))
-    per_batch_re = re.compile(r"part-b\d{5}\.parquet$")
-    merged = [f for f in files if not per_batch_re.search(os.path.basename(f))]
-    if not merged:
-        return
-    t = pq.read_table(merged)
-    kept = t.filter(pc.field("batch") != batch_id)
-    if kept.num_rows == t.num_rows:
-        return
-    tmp = d + ".rewrite"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
+    files = sorted(glob.glob(os.path.join(wh.path(table), "*.parquet")))
+    keep, merge = [], []
     for f in files:
-        if f not in merged:
-            os.link(f, os.path.join(tmp, os.path.basename(f)))
-    if kept.num_rows or len(merged) == len(files):
-        # an empty filtered table still gets a (0-row, schema-bearing) file
-        # when it would otherwise leave the dir empty, so readers see a
-        # valid parquet dir rather than a vanished table
-        pq.write_table(kept, os.path.join(tmp, f"part-rewrite-{time.time_ns():020d}.parquet"))
-    wh.swap_in(table, tmp)
+        m = _PER_BATCH_FILE.search(os.path.basename(f))
+        (keep if m and m.group(1) not in merge_batches else merge).append(f)
+    if not merge or (drop_batch is None and len(merge) == 1):
+        return len(files)
+    t = pq.read_table(merge)
+    if drop_batch is not None:
+        n = t.num_rows
+        t = t.filter(pc.field("batch") != drop_batch)
+        if t.num_rows == n:
+            return len(files)
+    # an empty merged table still gets a (0-row, schema-bearing) file when it
+    # would otherwise leave the dir empty, so readers see a valid parquet dir
+    # rather than a vanished table
+    merged = bool(t.num_rows or not keep)
+
+    def write(build: str) -> None:
+        os.makedirs(build)
+        for f in keep:
+            os.link(f, os.path.join(build, os.path.basename(f)))
+        if merged:
+            pq.write_table(t, os.path.join(build, f"part-archive-{time.time_ns():020d}.parquet"))
+
+    wh.rebuild(table, write)
+    return len(keep) + merged
+
+
+def _remove_batch_dirs(wh: Warehouse, batch_id: str) -> None:
+    """Delete ``batch=<id>`` under records and records_keys, making the next
+    ``_keys_table`` call re-sync the catalog when a keys partition went."""
+    for table in (RECORDS, RECORDS_KEYS):
+        d = os.path.join(wh.path(table), f"batch={batch_id}")
+        if os.path.isdir(d):
+            shutil.rmtree(d)
+            _keys_desync(wh)
 
 
 def _drop_batch(wh: Warehouse, batch_id: str) -> None:
@@ -234,11 +269,7 @@ def _drop_batch(wh: Warehouse, batch_id: str) -> None:
         ok = wh.spark.read.parquet(records_dir).filter(F.col("status") == "ok").select(*DEDUP_KEY)
         keys = wh.read(RECORDS_KEYS)
         _rebuild_keys(wh, keys.join(ok, on=DEDUP_KEY, how="left_anti"), keys.count() - ok.count())
-    for table in (RECORDS, RECORDS_KEYS):
-        d = os.path.join(wh.path(table), f"batch={batch_id}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    _keys_desync(wh)
+    _remove_batch_dirs(wh, batch_id)
     for table in (LINEAGE, METRICS_PARTIALS, METRICS_INGEST):
         f = os.path.join(wh.path(table), f"part-{batch_id}.parquet")
         if os.path.isfile(f):
@@ -247,7 +278,7 @@ def _drop_batch(wh: Warehouse, batch_id: str) -> None:
             # ALSO sweep the batch's rows out of archive-merged bookkeeping
             # files: left there, they would re-poison unit-list validation
             # (and double-count ingest metrics) on every later resume
-            _rewrite_without_batch(wh, table, batch_id)
+            _rewrite_bookkeeping(wh, table, set(), drop_batch=batch_id)
 
 
 KEYS_BUCKETS_DEFAULT = 32
@@ -360,28 +391,21 @@ def _keys_desync(wh: Warehouse) -> None:
 
 
 def _rebuild_keys(wh: Warehouse, keys: DataFrame, want_rows: int) -> None:
-    """Replace the whole ``records_keys`` table with ``keys`` (KEYS_COLS).
-
-    Crash-safe via the standard swap protocol: the new table is fully built
-    in ``records_keys.compact`` through a temp table with the same bucketed
-    layout (bucket-id file naming keeps bucket-pruned scans and the
-    Exchange-free anti-join working), verified against ``want_rows``, then
-    swapped in; ``Warehouse`` lock-acquisition recovery finishes or discards
-    any interrupted state. Caller must hold the warehouse lock."""
+    """Replace ``records_keys`` with ``keys`` (KEYS_COLS), row-checked
+    against ``want_rows``, built through a temp table with the same bucketed
+    layout (bucket-id file names keep bucket pruning and the Exchange-free
+    anti-join working). Caller must hold the warehouse lock."""
     layout = _KeysLayout(wh)
     spark = wh.spark
-    tmp = wh.path(RECORDS_KEYS) + ".compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    tmp_name = layout.name + "_compact"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-    layout.create(tmp_name, tmp)
-    layout.insert(keys, tmp_name)
-    spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
-    rows_after = spark.read.schema(KEYS_SCHEMA).parquet(tmp).count()
-    if rows_after != want_rows:
-        shutil.rmtree(tmp)
-        raise RuntimeError(f"keys rebuild row mismatch: {want_rows} -> {rows_after}; aborted")
-    wh.swap_in(RECORDS_KEYS, tmp)
+    tmp_name = layout.name + "_rewrite"
+
+    def write(build: str) -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
+        layout.create(tmp_name, build)
+        layout.insert(keys, tmp_name)
+        spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
+
+    wh.rebuild(RECORDS_KEYS, write, want_rows=want_rows, schema=KEYS_SCHEMA)
     _keys_desync(wh)  # force MSCK + REFRESH on next committed-keys read
 
 
@@ -439,6 +463,10 @@ def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
     return swept
 
 
+def _count_parquet(d: str) -> int:
+    return len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+
+
 def compact_keys(wh: Warehouse) -> dict | None:
     """Merge every batch's ``records_keys`` partition into ONE
     ``batch=archived`` partition with one file per (day, bucket) —
@@ -461,13 +489,12 @@ def compact_keys(wh: Warehouse) -> dict | None:
     # columns, so this is cheap relative to the rewrite itself, and a lost
     # row here means silent re-ingestion of committed data.
     rows_before = src.count()
-    files_before = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
+    files_before = _count_parquet(keys_dir)
     _rebuild_keys(wh, src.withColumn("batch", F.lit(ARCHIVED_KEYS_BATCH)), rows_before)
-    files_after = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
     return {
         "keys_rows": rows_before,
         "keys_files_before": files_before,
-        "keys_files_after": files_after,
+        "keys_files_after": _count_parquet(keys_dir),
     }
 
 
@@ -480,38 +507,70 @@ def compact_bookkeeping(wh: Warehouse, archived_ids: set[str]) -> dict:
     Per-batch file granularity exists so a REPROCESSED batch overwrites its
     own rows; archived batches are read-only and can never be reprocessed,
     so their rows can fold into a single merged file. Live (unarchived)
-    batches keep their per-batch files. Same .rewrite + swap protocol as
-    ``_rewrite_without_batch`` (crash-recoverable). Caller holds the lock.
+    batches keep their per-batch files. Caller holds the lock.
     """
-    import re
+    return {
+        table: _rewrite_bookkeeping(wh, table, archived_ids)
+        for table in (LINEAGE, METRICS_INGEST, METRICS_PARTIALS)
+        if os.path.isdir(wh.path(table))
+    }
 
-    import pyarrow.parquet as pq
 
-    per_batch_re = re.compile(r"part-(b\d{5})\.parquet$")
-    out = {}
-    for table in (LINEAGE, METRICS_INGEST, METRICS_PARTIALS):
-        d = wh.path(table)
-        if not os.path.isdir(d):
-            continue
-        files = sorted(glob.glob(os.path.join(d, "*.parquet")))
-        keep, merge = [], []
-        for f in files:
-            m = per_batch_re.search(os.path.basename(f))
-            (keep if m and m.group(1) not in archived_ids else merge).append(f)
-        if len(merge) <= 1:
-            out[table] = len(files)
-            continue
-        tmp = d + ".rewrite"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
-        for f in keep:
-            os.link(f, os.path.join(tmp, os.path.basename(f)))
-        pq.write_table(
-            pq.read_table(merge), os.path.join(tmp, f"part-archive-{time.time_ns():020d}.parquet")
+def archive(spark: SparkSession, warehouse_root: str) -> dict:
+    """Compact every table and flip every batch read-only — the parquet-local
+    stand-in for Iceberg ``rewrite_data_files`` / the reference's
+    gzip-and-mark-readonly (BigStorage.scala:338-350). Returns the summary
+    ``cli archive`` prints; a records rewrite whose row count differs raises
+    ``RowCountMismatch`` with nothing swapped."""
+    wh = Warehouse(warehouse_root, spark)
+    records_dir = wh.path(RECORDS)
+    # archive is where compression strength belongs (the reference keeps
+    # live segments uncompressed and gzips at archive time): the ingest
+    # write uses zstd level 1 for wall speed, the compaction pays for
+    # density once
+    with wh.lock(), _session_confs(spark, {ZSTD_LEVEL: "6"}):
+        # sweep TORN batches FIRST: a crashed run's lineage-less batch dir
+        # must never be compacted into batch=archived or marked read-only —
+        # its orphaned keys would anti-join the reprocessed records away
+        # while the torn records themselves get deleted (data loss)
+        swept = sweep_torn_batches(wh)
+        files_before = _count_parquet(records_dir)
+        rows = 0
+        if wh.exists(RECORDS):
+            df = wh.read(RECORDS)
+            rows = df.count()
+            wh.rebuild(
+                RECORDS,
+                lambda build: df.repartition(F.col("batch"), F.col("sink"))
+                .write.mode("overwrite")
+                .partitionBy("batch", "sink")
+                .parquet(build),
+                want_rows=rows,
+            )
+        # compacted layout is history: flip every batch read-only so a later
+        # update with remapped ids fails loudly instead of rewriting it
+        # (the reference's archive gzips segments AND marks them readOnly)
+        archived = sorted(
+            os.path.basename(d).split("=", 1)[1]
+            for d in glob.glob(os.path.join(records_dir, "batch=*"))
         )
-        wh.swap_in(table, tmp)
-        out[table] = len(keep) + 1
-    return out
+        wh.mark_archived(archived)
+        # archive EVERYTHING, index files included (BigStorage.scala:
+        # 338-350): merge the now-read-only batches' keys partitions to one
+        # file per (day, bucket) and their bookkeeping to one file per
+        # table. Merging erases per-batch attribution, which is only sound
+        # for read-only batches.
+        keys = compact_keys(wh)
+        bookkeeping = compact_bookkeeping(wh, set(archived))
+    return {
+        "files_before": files_before,
+        "files_after": _count_parquet(records_dir),
+        "rows": rows,
+        "archived": archived,
+        "swept_torn": swept,
+        "keys": keys,
+        "bookkeeping": bookkeeping,
+    }
 
 
 def _ts_day(ts_millis_col):
@@ -639,6 +698,24 @@ def _salt_expr(wh: Warehouse, salt: int, input_bytes: int | None = None):
     return expr
 
 
+def _commit_batch(wh: Warehouse, r: BatchResult, n_pages: int) -> BatchResult:
+    """Write a batch's ingest counters, then its lineage rows: the commit a
+    resume checks, so it comes after every data write of the batch."""
+    wh.write_small(
+        [(r.batch, n_pages, r.added, r.duplicates, r.errors, time.time())],
+        INGEST_SCHEMA,
+        METRICS_INGEST,
+        filename=r.batch,
+    )
+    wh.write_small(
+        [(r.batch, u, "committed", n_pages, time.time()) for u in r.files],
+        LINEAGE_SCHEMA,
+        LINEAGE,
+        filename=r.batch,
+    )
+    return r
+
+
 def run_batch(
     spark: SparkSession,
     wh: Warehouse,
@@ -650,45 +727,37 @@ def run_batch(
     source_format: str = "pages",
 ) -> BatchResult:
     """Ingest one batch. It tunes two session-global split confs
-    (maxPartitionBytes/openCostInBytes) for the batch and restores them on
-    the way out, so unrelated queries on the same session never inherit a
-    batch's (possibly tiny) split sizing."""
-    _CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    saved = {k: spark.conf.get(k, None) for k in _CONFS}
-    try:
-        # torn-write recovery FIRST: a batch dir without a lineage row is a
-        # partial write from a crashed run. Both the records partition and the
-        # keys partition must go before any DataFrame lists either table, or
-        # the anti-join would treat uncommitted keys as committed and drop the
-        # whole reprocessed batch. (Bookkeeping files are overwritten at commit
-        # time — same per-batch filename — so they need no pre-cleaning.)
-        for table in (RECORDS, RECORDS_KEYS):
-            d = os.path.join(wh.path(table), f"batch={batch_id}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-                _keys_desync(wh)
+    (maxPartitionBytes/openCostInBytes) and the zstd level for the batch and
+    restores them on the way out, so unrelated queries on the same session
+    never inherit a batch's (possibly tiny) split sizing."""
+    # torn-write recovery FIRST: a batch dir without a lineage row is a
+    # partial write from a crashed run. Both the records partition and the
+    # keys partition must go before any DataFrame lists either table, or
+    # the anti-join would treat uncommitted keys as committed and drop the
+    # whole reprocessed batch. (Bookkeeping files are overwritten at commit
+    # time — same per-batch filename — so they need no pre-cleaning.)
+    _remove_batch_dirs(wh, batch_id)
 
-        # split sizing: the parse stage is python-bound, so the scan must yield
-        # >= ~3 tasks per core or cores sit idle (the 128 MB default + 4 MB
-        # open-cost packs small files into a handful of splits). Runtime SQL
-        # confs, so this tunes per batch without session restart; on a real
-        # cluster with ~1 GB input files the default would already be fine.
-        total_bytes = sum(os.path.getsize(f) for f in files)
-        target_tasks = spark.sparkContext.defaultParallelism * 3
-        split = max(1 << 20, min(128 << 20, total_bytes // max(1, target_tasks)))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        spark.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
-        # live-segment write cost: the reference keeps live segments
-        # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
-        # — the analogous lifecycle here is a cheap codec on the ingest write
-        # (zstd level 1; the session default level 3 costs ~15% of batch wall
-        # for ~7% smaller files) and full-strength zstd when `archive` rewrites
-        # the partition. parquet-java reads the level from the hadoop conf at
-        # write time.
-        spark.sparkContext._jsc.hadoopConfiguration().set(
-            "parquet.compression.codec.zstd.level", "1"
-        )
-
+    # split sizing: the parse stage is python-bound, so the scan must yield
+    # >= ~3 tasks per core or cores sit idle (the 128 MB default + 4 MB
+    # open-cost packs small files into a handful of splits). Runtime SQL
+    # confs, so this tunes per batch without session restart; on a real
+    # cluster with ~1 GB input files the default would already be fine.
+    total_bytes = sum(os.path.getsize(f) for f in files)
+    target_tasks = spark.sparkContext.defaultParallelism * 3
+    split = max(1 << 20, min(128 << 20, total_bytes // max(1, target_tasks)))
+    # live-segment write cost: the reference keeps live segments
+    # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
+    # — the analogous lifecycle here is a cheap codec on the ingest write
+    # (zstd level 1; the session default level 3 costs ~15% of batch wall
+    # for ~7% smaller files) and full-strength zstd when `archive` rewrites
+    # the partition.
+    confs = {
+        "spark.sql.files.maxPartitionBytes": str(split),
+        "spark.sql.files.openCostInBytes": str(256 << 10),
+        ZSTD_LEVEL: "1",
+    }
+    with _session_confs(spark, confs):
         def _cpu_now() -> float:
             # system-wide cpu-seconds (user+sys): phase marks stay meaningful on
             # a host whose wall-clock is storm-inflated — cpu measures the work
@@ -780,19 +849,7 @@ def run_batch(
             # existed — so duplicates = n_ok, errors = 0. Still commit lineage
             # so resume skips it.
             parsed.unpersist()
-            wh.write_small(
-                [(batch_id, n_pages, 0, int(n_ok), 0, time.time())],
-                INGEST_SCHEMA,
-                METRICS_INGEST,
-                filename=batch_id,
-            )
-            wh.write_small(
-                [(batch_id, u, "committed", n_pages, time.time()) for u in files],
-                LINEAGE_SCHEMA,
-                LINEAGE,
-                filename=batch_id,
-            )
-            return BatchResult(batch_id, files, 0, int(n_ok), 0)
+            return _commit_batch(wh, BatchResult(batch_id, files, 0, int(n_ok), 0), n_pages)
 
         # reading the observation on a zero-row write job fails JVM-side (no
         # metrics row) — only reached here when the batch wrote data
@@ -868,18 +925,7 @@ def run_batch(
             METRICS_PARTIALS,
             filename=batch_id,
         )
-        wh.write_small(
-            [(batch_id, n_pages, added, n_dups, n_errors, time.time())],
-            INGEST_SCHEMA,
-            METRICS_INGEST,
-            filename=batch_id,
-        )
-        wh.write_small(
-            [(batch_id, u, "committed", n_pages, time.time()) for u in files],
-            LINEAGE_SCHEMA,
-            LINEAGE,
-            filename=batch_id,
-        )
+        result = _commit_batch(wh, BatchResult(batch_id, files, added, n_dups, n_errors), n_pages)
         _mark("bookkeeping")
         if os.environ.get("LSS_TIMING"):
             import sys
@@ -890,13 +936,7 @@ def run_batch(
                 spans.append(f"{phase}={at - prev:.2f}s/{c - cprev:.1f}cpu")
                 prev, cprev = at, c
             print(f"[timing] {batch_id}: " + " ".join(spans), file=sys.stderr)
-        return BatchResult(batch_id, files, added, n_dups, n_errors)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        return result
 
 
 def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:

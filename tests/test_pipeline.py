@@ -148,7 +148,7 @@ def test_torn_batch_reprocessed_idempotently(spark, warehouse, dataset):
     keep = lineage.filter(F.col("batch") != last).collect()
     wh.drop(LINEAGE)
     if keep:
-        wh.write(spark.createDataFrame(keep, lineage.schema), LINEAGE, mode="overwrite")
+        spark.createDataFrame(keep, lineage.schema).write.parquet(wh.path(LINEAGE))
     results = run_pipeline(spark, os.path.join(dataset, "pages"), wh.root, batch_files=2)
     assert len(results) == 1 and results[0].batch == last
     records_after = sorted(
@@ -239,10 +239,10 @@ def test_relative_warehouse_path(spark, tmp_path, monkeypatch):
 def test_zero_routed_update_writes_empty_aggregates(spark, tmp_path):
     """An update whose only unit holds no pages routes nothing: it commits
     one empty batch and still publishes both aggregate tables, empty and
-    with their schemas."""
+    with their schemas; `archive` then has no records to compact."""
     import pyarrow.parquet as pq
 
-    from log_server_spark.plans.pipeline import METRICS_SINK, METRICS_WINDOWED
+    from log_server_spark.plans.pipeline import METRICS_SINK, METRICS_WINDOWED, archive
 
     pages = tmp_path / "pages"
     pages.mkdir()
@@ -256,3 +256,5 @@ def test_zero_routed_update_writes_empty_aggregates(spark, tmp_path):
     windowed = wh.read(METRICS_WINDOWED)
     assert windowed.count() == 0
     assert "window_start" in windowed.columns
+    summary = archive(spark, wh.root)
+    assert (summary["rows"], summary["archived"]) == (0, [])

@@ -1,5 +1,5 @@
 """Round-2 pipeline hardening: keys-table pruning, incremental aggregates,
-warehouse lock, resume unit-validation, archive crash recovery, PIL branch."""
+warehouse lock, resume unit-validation, PIL branch."""
 
 import glob
 import os
@@ -166,30 +166,6 @@ def test_resume_revalidates_unit_lists(spark, dataset, warehouse):
     # partials carry no stale batches either
     pb = {r["batch"] for r in warehouse.read(METRICS_PARTIALS).select("batch").distinct().collect()}
     assert pb == {"b00000", "b00001"}
-
-
-@pytest.mark.slow
-def test_archive_crash_recovery(spark, warehouse):
-    """records.old present without records => restore; with records => drop.
-
-    Recovery happens on LOCK ACQUISITION (never unlocked, or it would race
-    a live archive swap running under the lock in another process)."""
-    records = warehouse.path(RECORDS)
-    old = records + ".old"
-    n = spark.read.parquet(records).count()
-    wh2 = Warehouse(warehouse.root, spark)
-    # crash between rename(records->old) and rename(compact->records)
-    os.rename(records, old)
-    with wh2.lock():
-        pass
-    assert os.path.isdir(records) and not os.path.isdir(old)
-    assert spark.read.parquet(records).count() == n
-    # crash after swap, before rmtree(old)
-    shutil.copytree(records, old)
-    with wh2.lock():
-        pass
-    assert os.path.isdir(records) and not os.path.isdir(old)
-    assert wh2.read(RECORDS).count() == n
 
 
 def test_multimodal_decode_with_and_without_pil(monkeypatch):

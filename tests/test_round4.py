@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from log_server_spark.catalog import Warehouse
 from log_server_spark.datagen import gen_domain_lookup, gen_lang_lookup
-from log_server_spark.plans.pipeline import RECORDS, RECORDS_KEYS, run_pipeline
+from log_server_spark.plans.pipeline import RECORDS, run_pipeline
+from tests.pages_util import write_pages_unit
 
 
 # ---------------------------------------------------------------------------
@@ -86,19 +87,6 @@ def test_no_rdd_probe_in_query_construction():
 # ---------------------------------------------------------------------------
 
 
-def _write_pages_unit(path, rows):
-    pq.write_table(
-        pa.table({
-            "url": pa.array([r[0] for r in rows], pa.string()),
-            "warc_ts": pa.array([r[1] for r in rows], pa.timestamp("us", tz="UTC")),
-            "html": pa.array([r[2].encode() for r in rows], pa.binary()),
-            "text": pa.array([r[2] for r in rows], pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-        }),
-        path,
-    )
-
-
 @pytest.mark.slow
 def test_pre_bucketing_warehouse_is_refused(spark, tmp_path_factory):
     """A warehouse whose records_keys predate the bucketed layout (no
@@ -108,11 +96,11 @@ def test_pre_bucketing_warehouse_is_refused(spark, tmp_path_factory):
     pages = os.path.join(base, "pages")
     os.makedirs(pages)
     html = "---- 2024-03-01 10:00:00 level:INFO table:users id:7 op:create\nhello body"
-    _write_pages_unit(
+    write_pages_unit(
         os.path.join(pages, "part-00000.parquet"),
         [("https://a.example.com/p/1", datetime(2024, 5, 15, tzinfo=timezone.utc), html)],
     )
-    _write_pages_unit(
+    write_pages_unit(
         os.path.join(pages, "part-00001.parquet"),
         [
             ("https://a.example.com/p/1b", datetime(2024, 6, 20, tzinfo=timezone.utc), html),
@@ -147,106 +135,6 @@ def test_pre_bucketing_warehouse_is_refused(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT #4: archive compacts the keys table + bookkeeping files
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.slow
-def test_archive_compacts_keys_and_bookkeeping(spark, tmp_path_factory, monkeypatch):
-    from log_server_spark.cli import main as cli_main
-    from log_server_spark.datagen import write_dataset
-    from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed
-    from log_server_spark.plans.pipeline import (
-        LINEAGE,
-        METRICS_INGEST,
-        METRICS_PARTIALS,
-        _committed_batches,
-        _committed_keys,
-    )
-
-    monkeypatch.setenv("LSS_KEYS_BUCKETS", "4")
-    data = str(tmp_path_factory.mktemp("r4_arc_data"))
-    write_dataset(data, seed=13, n=400, num_files=4)
-    pages = os.path.join(data, "pages")
-    wh_dir = str(tmp_path_factory.mktemp("r4_arc_wh"))
-    run_pipeline(spark, pages, wh_dir, batch_files=1)
-    wh = Warehouse(wh_dir, spark)
-
-    keys_cols = ["table", "record_id", "record_hash", "ts_millis", "day"]
-    before_keys = {tuple(r) for r in wh.read(RECORDS_KEYS).select(*keys_cols).collect()}
-    before_records = {
-        tuple(r) for r in wh.read(RECORDS).select("url", "seq", "table", "record_id").collect()
-    }
-    before_lineage = _committed_batches(wh)
-    expected_files = (
-        wh.read(RECORDS_KEYS)
-        .select("day", F.pmod(F.hash("record_hash"), F.lit(4)).alias("b"))
-        .distinct()
-        .count()
-    )
-    n_days = wh.read(RECORDS_KEYS).select("day").distinct().count()
-
-    rc = cli_main(["archive", "--warehouse", wh_dir])
-    assert rc == 0
-
-    # keys: single batch=archived partition, one file per (day, bucket)
-    batch_dirs = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*"))
-    assert [os.path.basename(d) for d in batch_dirs] == ["batch=archived"]
-    files = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "**", "*.parquet"), recursive=True)
-    # exactly ONE file per populated (day, bucket) — i.e. days x buckets
-    # once every bucket has data; empty (day, bucket) pairs write nothing
-    assert len(files) == expected_files
-    assert n_days < len(files) <= n_days * 4
-    # keys rows byte-identical
-    after_keys = {tuple(r) for r in wh.read(RECORDS_KEYS).select(*keys_cols).collect()}
-    assert after_keys == before_keys
-    # bookkeeping: one merged file per table, same lineage content
-    for table in (LINEAGE, METRICS_INGEST, METRICS_PARTIALS):
-        fs = glob.glob(os.path.join(wh.path(table), "*.parquet"))
-        assert len(fs) == 1, (table, fs)
-    assert _committed_batches(wh) == before_lineage
-
-    # the anti-join stays Exchange-free on the compacted committed side
-    lo, hi = (
-        wh.read(RECORDS_KEYS).agg(F.min("ts_millis"), F.max("ts_millis")).collect()[0]
-    )
-    committed = _committed_keys(wh, (lo, hi))
-    batch = wh.read(RECORDS).filter(F.col("status") == "ok").select(*DEDUP_KEY)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            anti_join_committed(batch, committed)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "Bucketed: true" in plan
-    assert plan.count("Exchange") == 1, plan
-
-    # cross-batch dedup against ARCHIVED keys still works: a late-landing
-    # unit that clones unit 0 must dedup 100% against the merged partition
-    import shutil as _sh
-
-    _sh.copyfile(
-        os.path.join(pages, sorted(os.listdir(pages))[0]),
-        os.path.join(pages, "part-99999.parquet"),
-    )
-    res = run_pipeline(spark, pages, wh_dir, batch_files=1)
-    assert len(res) == 1
-    assert res[0].added == 0, "every parseable record is an archived duplicate"
-    assert res[0].duplicates > 0
-    # records table content for the original batches unchanged
-    after_records = {
-        tuple(r)
-        for r in wh.read(RECORDS)
-        .filter(F.col("batch") != res[0].batch)
-        .select("url", "seq", "table", "record_id")
-        .collect()
-    }
-    assert after_records == before_records
-
-
-# ---------------------------------------------------------------------------
 # ADVICE: saved-format truncation must raise the guard-style ValueError
 # ---------------------------------------------------------------------------
 
@@ -263,50 +151,6 @@ def test_decode_saved_truncation_is_valueerror():
             decode_saved_bytes("t.saved", data[:cut])
     # version-only file decodes to zero records (not an error)
     assert decode_saved_bytes("t.saved", struct.pack(">i", 2)) == []
-
-
-@pytest.mark.slow
-def test_archive_sweeps_torn_batches_before_compacting(spark, tmp_path_factory):
-    """A torn (lineage-less) batch must be swept by `archive`, not folded
-    into batch=archived or marked read-only — otherwise its orphaned keys
-    would anti-join the reprocessed records away after the torn records are
-    deleted (self-review finding, round 4)."""
-    import shutil as _sh
-
-    from log_server_spark.cli import main as cli_main
-    from log_server_spark.datagen import write_dataset
-
-    data = str(tmp_path_factory.mktemp("r4_torn_data"))
-    write_dataset(data, seed=31, n=200, num_files=2)
-    pages = os.path.join(data, "pages")
-    wh_dir = str(tmp_path_factory.mktemp("r4_torn_wh"))
-    run_pipeline(spark, pages, wh_dir, batch_files=1)
-    wh = Warehouse(wh_dir, spark)
-    committed_keys = wh.read(RECORDS_KEYS).count()
-    want_records = {
-        tuple(r) for r in wh.read(RECORDS).select("url", "seq", "table", "record_id").collect()
-    }
-
-    # fabricate a torn batch: data + keys dirs, NO lineage row
-    for table in (RECORDS, RECORDS_KEYS):
-        src = os.path.join(wh.path(table), "batch=b00001")
-        _sh.copytree(src, os.path.join(wh.path(table), "batch=b00099"))
-
-    rc = cli_main(["archive", "--warehouse", wh_dir])
-    assert rc == 0
-    # torn batch swept, not archived, not folded into the merged keys
-    assert "b00099" not in wh.archived_batches()
-    assert not os.path.isdir(os.path.join(wh.path(RECORDS), "batch=b00099"))
-    assert not os.path.isdir(os.path.join(wh.path(RECORDS_KEYS), "batch=b00099"))
-    assert wh.read(RECORDS_KEYS).count() == committed_keys
-    # and the warehouse contents are exactly the committed rows
-    got = {
-        tuple(r) for r in wh.read(RECORDS).select("url", "seq", "table", "record_id").collect()
-    }
-    assert got == want_records
-    # a subsequent resume run has nothing to redo and loses nothing
-    assert run_pipeline(spark, pages, wh_dir, batch_files=1) == []
-    assert wh.read(RECORDS).count() == len(want_records)
 
 
 # ---------------------------------------------------------------------------

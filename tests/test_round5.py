@@ -1,12 +1,10 @@
 """Round-5 regressions: VERDICT r4 "What's wrong" #1/#2/#4 (idempotent
 error sink, session-conf restoration, newest-partials-only salt read),
 Next #4 (reliable checkpoint for components), and the ADVICE r4 fixes
-(spread_small_input object-store fallback, recoverable torn sweep,
-LSH threshold contract)."""
+(spread_small_input object-store fallback, LSH threshold contract)."""
 
 import glob
 import os
-from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -14,30 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from log_server_spark.catalog import Warehouse
-from log_server_spark.plans.pipeline import RECORDS, RECORDS_KEYS, run_pipeline
-
-
-_TS = datetime(2024, 3, 5, 12, 0, 0, tzinfo=timezone.utc)
-
-
-def _pages(rows) -> pa.Table:
-    """rows: (url, html_str)."""
-    return pa.table(
-        {
-            "url": pa.array([u for u, _ in rows], pa.string()),
-            "warc_ts": pa.array([_TS] * len(rows), pa.timestamp("us", tz="UTC")),
-            "html": pa.array([h.encode() for _, h in rows], pa.binary()),
-            "text": pa.array([h for _, h in rows], pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-        }
-    )
-
-
-def _write_pages(base: str, tbl: pa.Table) -> str:
-    pages = os.path.join(base, "pages")
-    os.makedirs(pages, exist_ok=True)
-    pq.write_table(tbl, os.path.join(pages, "part-00000.parquet"))
-    return pages
+from log_server_spark.plans.pipeline import RECORDS, run_pipeline
+from tests.pages_util import pages_table, write_pages
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +26,7 @@ def test_duplicate_malformed_pages_write_one_error_row(spark, tmp_path):
     ok = "---- 2024-03-05 12:00:00 level:INFO table:users id:7 op:sync\nbody here"
     bad = "---- 2024-03-05 12:00:00 level:WARN table:users header-only-no-newline"
     bad_v2 = "---- 2024-03-05 12:01:00 level:WARN table:users another-version-no-newline"
-    tbl = _pages(
+    tbl = pages_table(
         [
             ("https://a.example.com/ok", ok),
             ("https://a.example.com/bad", bad),
@@ -58,7 +34,7 @@ def test_duplicate_malformed_pages_write_one_error_row(spark, tmp_path):
             ("https://a.example.com/bad2", bad_v2),
         ]
     )
-    pages = _write_pages(str(tmp_path), tbl)
+    pages = write_pages(str(tmp_path), tbl)
     run_pipeline(spark, pages, str(tmp_path / "wh"), batch_files=1)
     wh = Warehouse(str(tmp_path / "wh"), spark)
     recs = wh.read(RECORDS)
@@ -75,8 +51,8 @@ def test_duplicate_malformed_pages_write_one_error_row(spark, tmp_path):
 def test_distinct_malformed_versions_same_url_both_kept(spark, tmp_path):
     bad1 = "---- 2024-03-05 12:00:00 level:WARN table:users version-one"
     bad2 = "---- 2024-03-05 12:05:00 level:WARN table:users version-two"
-    tbl = _pages([("https://b.example.com/x", bad1), ("https://b.example.com/x", bad2)])
-    pages = _write_pages(str(tmp_path), tbl)
+    tbl = pages_table([("https://b.example.com/x", bad1), ("https://b.example.com/x", bad2)])
+    pages = write_pages(str(tmp_path), tbl)
     run_pipeline(spark, pages, str(tmp_path / "wh"), batch_files=1)
     wh = Warehouse(str(tmp_path / "wh"), spark)
     errs = wh.read(RECORDS).filter(F.col("status") != "ok")
@@ -90,62 +66,31 @@ def test_distinct_malformed_versions_same_url_both_kept(spark, tmp_path):
 
 
 def test_run_pipeline_restores_session_split_confs(spark, tmp_path):
+    """Neither run_batch (split sizing, zstd level 1) nor `archive` (zstd
+    level 6) leaves its confs in the session or its Hadoop conf."""
+    from log_server_spark.cli import main as cli_main
     from log_server_spark.datagen import write_dataset
 
-    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    before = {k: spark.conf.get(k, None) for k in keys}
-    data = str(tmp_path / "data")
-    write_dataset(data, seed=5, n=60, num_files=1)
-    run_pipeline(spark, os.path.join(data, "pages"), str(tmp_path / "wh"), batch_files=1)
-    after = {k: spark.conf.get(k, None) for k in keys}
-    assert after == before
-
-
-# ---------------------------------------------------------------------------
-# ADVICE #2: torn sweep is recoverable (rename, not rmtree) and refuses
-# to run when the lineage table is missing but batch partitions exist
-# ---------------------------------------------------------------------------
-
-
-def _tiny_warehouse(spark, tmp_path):
-    ok = "---- 2024-03-05 12:00:00 level:INFO table:users id:7 op:sync\nbody"
-    pages = _write_pages(str(tmp_path), _pages([("https://c.example.com/1", ok)]))
-    whdir = str(tmp_path / "wh")
-    run_pipeline(spark, pages, whdir, batch_files=1)
-    return Warehouse(whdir, spark)
-
-
-def test_sweep_renames_torn_batch_to_hidden_dir(spark, tmp_path):
-    import shutil
-
-    from log_server_spark.plans.pipeline import sweep_torn_batches
-
-    wh = _tiny_warehouse(spark, tmp_path)
-    committed = wh.read(RECORDS).count()
-    src = os.path.join(wh.path(RECORDS), "batch=b00000")
-    shutil.copytree(src, os.path.join(wh.path(RECORDS), "batch=b00099"))
-    with wh.lock():
-        assert sweep_torn_batches(wh) == ["b00099"]
-    # renamed to an underscore-prefixed sibling: invisible to scans,
-    # hand-recoverable after an operator mistake
-    torn = glob.glob(os.path.join(wh.path(RECORDS), "_torn-b00099-*"))
-    assert len(torn) == 1
-    assert not os.path.isdir(os.path.join(wh.path(RECORDS), "batch=b00099"))
-    assert wh.read(RECORDS).count() == committed
-
-
-def test_sweep_refuses_when_lineage_missing(spark, tmp_path):
-    import shutil
-
-    from log_server_spark.plans.pipeline import LINEAGE, sweep_torn_batches
-
-    wh = _tiny_warehouse(spark, tmp_path)
-    shutil.rmtree(wh.path(LINEAGE))
-    with wh.lock():
-        with pytest.raises(RuntimeError, match="refusing to sweep"):
-            sweep_torn_batches(wh)
-    # data untouched by the refused sweep
-    assert os.path.isdir(os.path.join(wh.path(RECORDS), "batch=b00000"))
+    zstd = "parquet.compression.codec.zstd.level"
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes", zstd)
+    hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+    hadoop_saved = hadoop.get(zstd)
+    hadoop.set(zstd, "3")  # a known value, whatever earlier work left there
+    try:
+        before = {k: spark.conf.get(k, None) for k in keys}
+        data = str(tmp_path / "data")
+        write_dataset(data, seed=5, n=60, num_files=1)
+        wh = str(tmp_path / "wh")
+        run_pipeline(spark, os.path.join(data, "pages"), wh, batch_files=1)
+        assert cli_main(["archive", "--warehouse", wh]) == 0
+        after = {k: spark.conf.get(k, None) for k in keys}
+        assert after == before
+        assert hadoop.get(zstd) == "3"
+    finally:
+        if hadoop_saved is None:
+            hadoop.unset(zstd)
+        else:
+            hadoop.set(zstd, hadoop_saved)
 
 
 # ---------------------------------------------------------------------------
